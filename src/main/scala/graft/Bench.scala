@@ -159,27 +159,11 @@ object Bench {
 
     // Previous round's interleaved medians (the drifter baseline) — read
     // BEFORE the first incremental emission overwrites bench_last.json.
-    // Only a SAME-SF artifact is comparable: a local smoke at another scale
-    // factor must not flag the whole gate as drifted. Only a FINAL-phase
-    // artifact whose interleave ran ≥2 measured passes is a baseline: a
-    // run killed (or budget-truncated) after pass 1 leaves single-sample
-    // cold-heavy medians that spuriously flag dozens of drifters the next
-    // round (r17's driver artifact did exactly that — 19 flags, all
-    // in-band on isolated re-measure).
     val prevTimes: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
+      try baseline(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("bench_last.json")),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val parts = txt.split("\"queries\":\\{", 2)
-        if (parts.length < 2 ||
-            !txt.contains(s""""sf":"$sfDir"""") ||
-            !txt.contains(""""phase":"final"""") ||
-            txt.contains("interleave_stopped_after_pass_1")) Map.empty
-        else "\"([^\"]+)\":(-?[0-9.]+)".r
-          .findAllMatchIn(parts(1).takeWhile(_ != '}'))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty[String, Double] }
+          java.nio.charset.StandardCharsets.UTF_8), sfDir, cpus)
+      catch { case _: Throwable => Map.empty[String, Double] }
 
     // ---- incremental artifact emission --------------------------------
     // The artifact is (re)written and (re)printed at every phase boundary —
@@ -254,7 +238,7 @@ object Bench {
         s""","timed_out":$toJson""" +
         s""","queries":$qs,"isolated":$iso,"isolated_spread":$isoSpread""" +
         s""","drifters":$driftJson,$streamKeys""" +
-        s""","stream_trend":$runsJson,"sf":"$sfDir"}"""
+        s""","stream_trend":$runsJson,"sf":"$sfDir","cpus":"$cpus"}"""
       // Two lines, parse target last. The driver keeps only the LAST 2000
       // chars of stdout (BENCH_r08/r09 lost the head of the one-line
       // artifact): line 1 is the full artifact (also persisted for the
@@ -267,7 +251,7 @@ object Bench {
       // opens the parse target.
       val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
         s""","n_queries":${res.size},"phase":"$phase",$streamKeys""" +
-        s""","sf":"$sfDir","queries_full":"bench_last.json","queries":{"""
+        s""","sf":"$sfDir","cpus":"$cpus","queries_full":"bench_last.json","queries":{"""
       val budget = 1400 - head.length - 2
       val slowestFirst = res.toSeq.sortBy(-_._2)
         .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
@@ -476,5 +460,28 @@ object Bench {
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
     emit("final", printFull = true)
+  }
+
+  /** Per-query medians of a previous artifact, usable as the drifter
+    * baseline only when it is comparable. Only a SAME-SF, SAME-CPUS artifact
+    * is: a local smoke at another scale factor, or an 8-core run read by a
+    * 32-core one, must not flag the whole gate as drifted. Only a
+    * FINAL-phase artifact whose interleave ran ≥2 measured passes is a
+    * baseline: a run killed (or budget-truncated) after pass 1 leaves
+    * single-sample cold-heavy medians that spuriously flag dozens of
+    * drifters the next round (the r17 artifact did exactly that — 19
+    * flags, all in-band on isolated re-measure).
+    */
+  private[graft] def baseline(
+      txt: String, sfDir: String, cpus: String): Map[String, Double] = {
+    val parts = txt.split("\"queries\":\\{", 2)
+    if (parts.length < 2 ||
+        !txt.contains(s""""sf":"$sfDir"""") ||
+        !txt.contains(s""""cpus":"$cpus"""") ||
+        !txt.contains(""""phase":"final"""") ||
+        txt.contains("interleave_stopped_after_pass_1")) Map.empty
+    else "\"([^\"]+)\":(-?[0-9.]+)".r
+      .findAllMatchIn(parts(1).takeWhile(_ != '}'))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 }

@@ -136,9 +136,10 @@ object StreamBench {
     // Measured at sf0.1/RocksDB the two are at parity: the paned path's
     // second stateful stage (extra shuffle + state commits per batch) offsets
     // its 60× smaller pre-aggregation expansion at this batch size — the
-    // pane win concentrates in the BATCH path (plans.PaneRewrite, 4.9× on
-    // this shape) and grows with size/slide; both numbers are reported so
-    // the trade-off stays measured, not assumed.
+    // pane win concentrates in the BATCH path (TimeWindows.aggregatePaned,
+    // whose keyed pane expansion stays shuffle-local) and grows with
+    // size/slide; both numbers are reported so the trade-off stays
+    // measured, not assumed.
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val slideLoops = math.max(1, loops / 10)
     def slidingRun(paned: Boolean): Double = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Time-based (RANGE_BASED) tumbling/sliding window aggregation.
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * windows are identified by their start, empty windows are not emitted
   * (FIXTURES.md pins both conventions).
   *
-  * Two physical strategies, same results:
+  * Two physical strategies, same results (an NTZ `ts` read as UTC wall clock):
   *
   *  - [[aggregate]]: Spark's native `window(ts, size, slide)` — each row is
   *    expanded to size/slide window buckets *before* the shuffle. Fine for
@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   *
   *  - [[aggregatePaned]]: LightSaber-style pane slicing
   *    (reference WindowDefinition.h:46,80-90 — paneSize = gcd(size, slide)).
-  *    Level 1 partially aggregates rows into gcd-size panes (map-side combine
-  *    shrinks this to ~|panes × keys| rows); level 2 expands *panes* (not rows)
+  *    Level 1 partially aggregates rows into gcd-size panes, the pane id being
+  *    integer floor division on the stored microseconds ([[EpochBucket]]; no
+  *    zone conversion, no double math), and map-side combine shrinks this to
+  *    ~|panes × keys| rows; level 2 expands *panes* (not rows)
   *    to the windows they belong to and merges algebraic partials. Exact for
   *    CNT/SUM/AVG/MIN/MAX. At scale this cuts shuffle volume by the ratio of
   *    rows-per-pane and is the strategy of choice for sliding windows.
@@ -30,19 +32,20 @@ import org.apache.spark.sql.functions._
   */
 object TimeWindows {
 
-  /** Integer-exact floor division for non-negative longs expressed in Column
-    * algebra: (a − a mod b) / b. The subtraction makes the dividend an exact
-    * multiple of b, so the double division is exact — a naive floor(a / b)
-    * can land one below/above at exact multiples.
+  /** Start (epoch seconds) of the `bucketSec` bucket holding `ts`, by
+    * integer floor division on the stored microseconds ([[EpochBucket]]).
     */
-  def idiv(a: Column, b: Long): Column =
-    ((a - pmod(a, lit(b))) / lit(b)).cast("long")
+  def epochBucket(ts: Column, bucketSec: Long): Column =
+    GraftColumnBridge.column(EpochBucket(GraftColumnBridge.expression(ts), bucketSec))
 
-  /** Epoch seconds (floor) as exact integer math — matches the oracle's
-    * `epoch_us(ts) // 1000000`.
+  /** Epoch seconds (floor). Equals the oracle's `epoch_us(ts) // 1000000`
+    * from 1970 on; DuckDB's `//` truncates, so before 1970 they part on
+    * sub-second times.
     */
-  def epochSeconds(ts: Column): Column =
-    idiv(unix_micros(ts.cast("timestamp")), 1000000L)
+  def epochSeconds(ts: Column): Column = epochBucket(ts, 1L)
+
+  /** Largest multiple of `b` ≤ `a`, in long arithmetic (pmod is a floor mod). */
+  private def floorTo(a: Column, b: Long): Column = a - pmod(a, lit(b))
 
   /** Native-window strategy. `keys` are column names present on `df`. */
   def aggregate(
@@ -52,10 +55,11 @@ object TimeWindows {
       slideSec: Long,
       keys: Seq[String],
       aggs: Seq[AggSpec]): DataFrame = {
-    val w = window(ts.cast("timestamp"), s"$sizeSec seconds", s"$slideSec seconds")
+    // Uncast, window() reads TIMESTAMP and NTZ micros as the kernel does.
+    val w = window(ts, s"$sizeSec seconds", s"$slideSec seconds")
     df.groupBy(w +: keys.map(col): _*)
       .agg(aggs.head.toColumn, aggs.tail.map(_.toColumn): _*)
-      .withColumn("ws", col("window.start").cast("long"))
+      .withColumn("ws", epochSeconds(col("window.start")))
       .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
   }
 
@@ -73,7 +77,7 @@ object TimeWindows {
     val partials = aggs.flatMap(_.partialCols).distinct
 
     // Level 1: per-pane partial aggregation (Catalyst adds map-side combine).
-    val paneCol = (idiv(epochSeconds(ts), pane) * lit(pane)).as("__pane")
+    val paneCol = epochBucket(ts, pane).as("__pane")
     val level1 = df
       .groupBy(paneCol +: keys.map(col): _*)
       .agg(partials.head._2.as(partials.head._1),
@@ -81,7 +85,7 @@ object TimeWindows {
 
     // Pane p (fully) belongs to windows with start ws ∈ [p + pane − size, p],
     // ws a multiple of slide. All bounds are multiples of pane by construction,
-    // and ceil-to-slide is written as floor((x + slide − 1) / slide) · slide.
+    // and ceil-to-slide is written as floorTo(x + slide − 1, slide).
     //
     // For keyed windows, re-shuffle the (small) pane partials by key BEFORE
     // expansion: HashPartitioning(keys) satisfies the level-2 groupBy's
@@ -90,8 +94,8 @@ object TimeWindows {
     // the pane-merge locality of the reference's slot ring, in Spark terms.
     val colocated =
       if (keys.nonEmpty) level1.repartition(keys.map(col): _*) else level1
-    val lo = idiv(col("__pane") + lit(pane - sizeSec + slideSec - 1), slideSec) * lit(slideSec)
-    val hi = idiv(col("__pane"), slideSec) * lit(slideSec)
+    val lo = floorTo(col("__pane") + lit(pane - sizeSec + slideSec - 1), slideSec)
+    val hi = floorTo(col("__pane"), slideSec)
     val expanded = colocated
       .withColumn("ws", explode(sequence(lo, hi, lit(slideSec))))
 

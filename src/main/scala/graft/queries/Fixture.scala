@@ -21,10 +21,19 @@ final case class Fixture(
   * the at-rest fixtures exist to demonstrate. Verify still pays every
   * build once per JVM. NOT for fixtures that append or mutate: an append
   * run twice is a different index.
+  *
+  * A key counts as done only once its body has returned: a build that throws
+  * (or is interrupted) is retried by the next caller instead of leaving a
+  * missing or half-written index behind. A per-key lock makes a concurrent
+  * caller wait for the running build rather than read its output early.
   */
 object FixtureOnce {
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def apply(key: String)(body: => Unit): Unit = if (done.add(key)) body
+  def apply(key: String)(body: => Unit): Unit =
+    if (!done.contains(key)) locks.computeIfAbsent(key, _ => new AnyRef).synchronized {
+      if (!done.contains(key)) { body; done.add(key) }
+    }
 }
 
 object SqlGen {

@@ -10,6 +10,13 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `inputTypes` of an expression that takes TIMESTAMP or TIMESTAMP_NTZ and
+    * lets the analyzer cast anything else to TIMESTAMP (the type classes are
+    * sql-package-private).
+    */
+  val anyTimestampInput =
+    Seq(types.TypeCollection(types.TimestampType, types.TimestampNTZType))
+
   /** DataFrame over an arbitrary logical plan — lets an optimizer rule
     * ANALYZE a Column-API expression against a plan's own attributes
     * (e.g. [[graft.plans.MvRewrite]] re-deriving the hash expression a

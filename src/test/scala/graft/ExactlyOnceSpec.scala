@@ -58,9 +58,10 @@ class ExactlyOnceSpec extends SparkTestBase {
     assert(got.groupBy("ws", "event_type").count().where(col("count") > 1).count() == 0,
       "duplicate window emissions after restart")
     // correctness: everything emitted matches the batch ground truth
-    // (windows are second-granular here, so batch uses floor-second es)
+    // (windows are second-granular here, so batch buckets the same es-second
+    // timestamps the stream windows)
     val batch = all
-      .withColumn("ws", TimeWindows.idiv(col("es"), 600) * 600)
+      .withColumn("ws", TimeWindows.epochBucket(timestamp_micros(col("es") * 1000000L), 600))
       .groupBy("ws", "event_type").agg(count(lit(1)).as("cnt"))
     assert(got.exceptAll(batch).count() == 0, "emitted windows disagree with batch")
     // completeness: every window finalized by the last watermark was emitted
