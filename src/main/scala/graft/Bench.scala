@@ -26,6 +26,7 @@ object Bench {
       // cache; evicted classes force re-JIT mid-run and charge one query for
       // another's codegen. Static conf — must be set before session creation.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config(Map(graft.streaming.Streams.checkpointFiles))
       .getOrCreate()
     // ERROR, not WARN: the r16 kill tail was a wall of streaming WARN lines
     // that pushed every parseable byte out of the driver's 2000-char stdout
@@ -290,18 +291,15 @@ object Bench {
       try {
         settle()
         val ss = spark.newSession()
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        ss.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-        val rows = StreamBench.loadRows(ss, sfDir)
-        if (warm)
-          StreamBench.tumblingReplay(ss, rows, math.max(2, streamLoops / 5))
-        val (n, sec, lat) = StreamBench.tumblingReplay(ss, rows, streamLoops)
-        Some(StreamRun((n / sec).toLong,
-          StreamBench.pctOf(lat, 0.50), StreamBench.pctOf(lat, 0.95),
-          StreamBench.pctOf(lat, 0.99)))
+        graft.streaming.Streams.withRocksDb(ss) {
+          val rows = StreamBench.loadRows(ss, sfDir)
+          if (warm)
+            StreamBench.tumblingReplay(ss, rows, math.max(2, streamLoops / 5))
+          val (n, sec, lat) = StreamBench.tumblingReplay(ss, rows, streamLoops)
+          Some(StreamRun((n / sec).toLong,
+            StreamBench.pctOf(lat, 0.50), StreamBench.pctOf(lat, 0.95),
+            StreamBench.pctOf(lat, 0.99)))
+        }
       } catch { case _: Throwable => None }
 
     // ---- EARLY stream probe -------------------------------------------

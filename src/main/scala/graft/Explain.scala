@@ -18,6 +18,7 @@ object Explain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Map(graft.streaming.Streams.checkpointFiles))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     mode match {

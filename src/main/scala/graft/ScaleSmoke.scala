@@ -37,6 +37,7 @@ object ScaleSmoke {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
+      .config(Map(graft.streaming.Streams.checkpointFiles))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

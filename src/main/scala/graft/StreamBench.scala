@@ -47,9 +47,7 @@ object StreamBench {
     val agg = Streams.windowAgg(df, 600, 600, Seq("event_type"),
       Seq(AggSpec(AggFn.Cnt, col("value"), "cnt"),
           AggSpec(AggFn.Sum, col("value"), "sum_v")))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Streams.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
       val q = agg.writeStream.outputMode("update")
         .format("memory").queryName(s"sb_out_${System.nanoTime}").start()
       val t0 = System.nanoTime()
@@ -67,7 +65,7 @@ object StreamBench {
         .sorted
       q.stop()
       (rows.length.toLong * loops, sec, lat)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   /** Percentile over the sorted latency samples (−1 when empty). */
@@ -90,14 +88,14 @@ object StreamBench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.stateStore.providerClass", provider)
-      // match graft.Bench's stream-trend conditions (changelog
-      // checkpointing — the large-state production posture), so this
-      // standalone main is a valid fresh-JVM cross-check of the
-      // artifact's stream block
+      // with the default rocksdb provider, these settings are the posture
+      // of Streams.withRocksDb, which graft.Bench's stream block runs
+      // under, so this standalone main is a fresh-JVM cross-check of it
       .config(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
       .config("spark.ui.enabled", "false")
+      .config(Map(Streams.checkpointFiles))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -133,12 +131,9 @@ object StreamBench {
     // paned two-level decomposition, same 3600/60 shape as the CM/SG
     // benchmarks, streamed with a watermark so state is evictable. Fewer
     // loops: per-tuple work is 60× the tumbling case for the native path.
-    // Measured at sf0.1/RocksDB the two are at parity: the paned path's
-    // second stateful stage (extra shuffle + state commits per batch) offsets
-    // its 60× smaller pre-aggregation expansion at this batch size — the
-    // pane win concentrates in the BATCH path (TimeWindows.aggregatePaned,
-    // whose keyed pane expansion stays shuffle-local) and grows with
-    // size/slide; both numbers are reported so the trade-off stays
+    // The paned path pays a second stateful stage (an extra shuffle and
+    // state commits per batch) for a 60× smaller pre-aggregation
+    // expansion; both numbers are reported so the trade-off stays
     // measured, not assumed.
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val slideLoops = math.max(1, loops / 10)

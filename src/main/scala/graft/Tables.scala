@@ -68,9 +68,11 @@ object Tables {
     load(spark, sfDir, "embeddings")
 
   /** The `events` table with the integer epoch-second column every windowed
-    * fixture keys on. `unix_micros div 1_000_000` is exact integer math (no
-    * double rounding), matching the DuckDB oracle's `epoch_us(ts) // 1000000`.
+    * fixture keys on: the floor of `ts` in seconds
+    * ([[graft.operators.TimeWindows.epochSeconds]]), before 1970 too, as the
+    * DuckDB oracle's `SqlGen.es`.
     */
   def eventsWithEpoch(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir).withColumn("es", expr("unix_micros(ts) div 1000000"))
+    events(spark, sfDir).withColumn("es",
+      graft.operators.TimeWindows.epochSeconds(col("ts")))
 }

@@ -38,14 +38,23 @@ object TimeWindows {
   def epochBucket(ts: Column, bucketSec: Long): Column =
     GraftColumnBridge.column(EpochBucket(GraftColumnBridge.expression(ts), bucketSec))
 
-  /** Epoch seconds (floor). Equals the oracle's `epoch_us(ts) // 1000000`
-    * from 1970 on; DuckDB's `//` truncates, so before 1970 they part on
-    * sub-second times.
-    */
+  /** Epoch seconds (floor), before 1970 too; the oracle's `SqlGen.es`. */
   def epochSeconds(ts: Column): Column = epochBucket(ts, 1L)
 
   /** Largest multiple of `b` ≤ `a`, in long arithmetic (pmod is a floor mod). */
   private def floorTo(a: Column, b: Long): Column = a - pmod(a, lit(b))
+
+  /** Starts (epoch seconds, ascending) of the (size, slide) windows that
+    * fully hold the pane starting at `paneStart`: ws ∈ [p + pane − size, p],
+    * ws a multiple of slide. All bounds are multiples of pane by
+    * construction, and ceil-to-slide is written as floorTo(x + slide − 1,
+    * slide). The level-2 expansion of both pane paths (batch
+    * [[aggregatePaned]] and the streaming `Streams.windowAggPaned`).
+    */
+  private[graft] def paneWindowStarts(
+      paneStart: Column, pane: Long, sizeSec: Long, slideSec: Long): Column =
+    sequence(floorTo(paneStart + lit(pane - sizeSec + slideSec - 1), slideSec),
+      floorTo(paneStart, slideSec), lit(slideSec))
 
   /** Native-window strategy. `keys` are column names present on `df`. */
   def aggregate(
@@ -83,10 +92,6 @@ object TimeWindows {
       .agg(partials.head._2.as(partials.head._1),
            partials.tail.map { case (n, c) => c.as(n) }: _*)
 
-    // Pane p (fully) belongs to windows with start ws ∈ [p + pane − size, p],
-    // ws a multiple of slide. All bounds are multiples of pane by construction,
-    // and ceil-to-slide is written as floorTo(x + slide − 1, slide).
-    //
     // For keyed windows, re-shuffle the (small) pane partials by key BEFORE
     // expansion: HashPartitioning(keys) satisfies the level-2 groupBy's
     // ClusteredDistribution(ws, keys), so Catalyst inserts no further
@@ -94,10 +99,8 @@ object TimeWindows {
     // the pane-merge locality of the reference's slot ring, in Spark terms.
     val colocated =
       if (keys.nonEmpty) level1.repartition(keys.map(col): _*) else level1
-    val lo = floorTo(col("__pane") + lit(pane - sizeSec + slideSec - 1), slideSec)
-    val hi = floorTo(col("__pane"), slideSec)
-    val expanded = colocated
-      .withColumn("ws", explode(sequence(lo, hi, lit(slideSec))))
+    val expanded = colocated.withColumn("ws",
+      explode(paneWindowStarts(col("__pane"), pane, sizeSec, slideSec)))
 
     // Level 2: merge pane partials per window.
     expanded

@@ -37,8 +37,17 @@ object FixtureOnce {
 }
 
 object SqlGen {
-  /** DuckDB fragment: epoch seconds (floor) of a timestamp column. */
-  def es(tsCol: String): String = s"epoch_us($tsCol::TIMESTAMP) // 1000000"
+  /** DuckDB fragment: the largest multiple of `b` (> 0) that is ≤ `a`.
+    * DuckDB's integer `//` and `%` truncate toward zero, so the floor is
+    * taken through a non-negative remainder.
+    */
+  private def floorTo(a: String, b: Long): String = s"(($a) - ((($a) % $b) + $b) % $b)"
+
+  /** DuckDB fragment: epoch seconds (floor) of a timestamp column, as
+    * `TimeWindows.epochSeconds`, before 1970 too.
+    */
+  def es(tsCol: String): String =
+    s"${floorTo(s"epoch_us($tsCol::TIMESTAMP)", 1000000)} // 1000000"
 
   /** DuckDB fragment that expands a row at epoch-second `es` to every
     * window-start `ws` of a (size, slide) sliding window containing it —
@@ -46,6 +55,6 @@ object SqlGen {
     * ws ≡ 0 (mod slide).
     */
   def wsExpand(size: Long, slide: Long): String =
-    s"unnest(generate_series(((es - $size + $slide) // $slide) * $slide, (es // $slide) * $slide, $slide)) AS ws"
+    s"unnest(generate_series(${floorTo(s"es - $size + $slide", slide)}, ${floorTo("es", slide)}, $slide)) AS ws"
 
 }

@@ -864,10 +864,10 @@ object ReferenceQueries {
     // not a data-scaled shuffle: every stateful operator writes state/delta
     // files per partition per micro-batch, so 32 partitions on a replay this
     // size is pure checkpoint-I/O overhead (measured 16 s → ~5 s for the
-    // chained paned fixture at sf0.1). Size it to the replay and restore.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    // chained paned fixture at sf0.1). Size it to the replay and restore;
+    // checkpoint files go through Streams.checkpointFiles.
+    graft.streaming.Streams.withConf(s,
+        "spark.sql.shuffle.partitions" -> "4", graft.streaming.Streams.checkpointFiles) {
       val q = buildAgg(stream).writeStream.outputMode("append")
         .format("memory").queryName(sink).start()
       try {
@@ -878,7 +878,7 @@ object ReferenceQueries {
         ms.addData(Seq(rows.last)) // apply the final watermark (see above)
         q.processAllAvailable()
       } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(sink)
   }
 

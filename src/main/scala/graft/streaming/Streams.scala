@@ -94,14 +94,26 @@ object Streams {
       .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
   }
 
-  /** Pane-based sliding aggregation in streaming: tumbling gcd-pane partial
-    * aggregation chained into a sliding-window merge over the pane column —
-    * Spark 3.4+ chained stateful aggregations (append mode). Raw rows reduce
-    * to |panes × keys| partials in stage 1; the stage-2 stateful aggregation
-    * then expands those partials size/slide-fold and shuffles the expansion
-    * (streaming state requires partitioning on (window, keys), so the batch
-    * path's expansion-stays-local trick does not apply) — still a win
-    * whenever rows-per-pane×key exceeds 1, which is the high-rate regime.
+  /** Pane-based sliding aggregation in streaming: the batch
+    * [[TimeWindows.aggregatePaned]] as two chained stateful aggregations
+    * (Spark 3.4+, append mode).
+    *
+    * Level 1 partially aggregates rows into tumbling gcd-size panes with
+    * `window()` on the watermarked `ts`. Level 2 explodes each pane partial
+    * into the starts of the windows that fully hold it
+    * ([[TimeWindows.paneWindowStarts]], the batch path's expansion, planned
+    * as one Generate; `window()` on the pane column would plan an Expand
+    * with size/slide projections and code-generate it on every trigger)
+    * and merges the partials per window.
+    *
+    * Level 2's key is the window END, `timestamp_seconds(ws + size)`,
+    * carrying the watermark metadata of the level-1 `window` column. The
+    * state store therefore evicts, and append mode emits, a window exactly
+    * when the watermark reaches its end, the rule `window()` applies to
+    * its window struct. Output `ws` is that end minus size. Streaming
+    * state is partitioned on (window, keys), so unlike the batch path the
+    * expansion is shuffled; still a win whenever rows-per-pane×key
+    * exceeds 1.
     */
   def windowAggPaned(
       stream: DataFrame,
@@ -116,11 +128,18 @@ object Streams {
       .groupBy(window(col("ts"), s"$pane seconds") +: keys.map(col): _*)
       .agg(partials.head._2.as(partials.head._1),
            partials.tail.map { case (n, c) => c.as(n) }: _*)
-    level1
-      .groupBy(window(col("window"), s"$sizeSec seconds", s"$slideSec seconds") +:
-        keys.map(col): _*)
+    val starts = TimeWindows.paneWindowStarts(
+      TimeWindows.epochSeconds(col("window.start")), pane, sizeSec, slideSec)
+    val windowEnd = timestamp_seconds(col("__ws") + lit(sizeSec))
+      .as("window", level1.schema("window").metadata)
+    // a projected column, not a grouping alias: the analyzer strips a
+    // grouping alias, metadata and all, and append mode needs the watermark
+    // on a key
+    level1.withColumn("__ws", explode(starts))
+      .select(windowEnd +: (keys ++ partials.map(_._1)).map(col): _*)
+      .groupBy(col("window") +: keys.map(col): _*)
       .agg(aggs.head.finalCol, aggs.tail.map(_.finalCol): _*)
-      .withColumn("ws", col("window.start").cast("long"))
+      .withColumn("ws", unix_seconds(col("window")) - lit(sizeSec))
       .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
   }
 
@@ -146,28 +165,51 @@ object Streams {
       "inner")
   }
 
-  /** `transformWithState` (state-v2) runs only on the RocksDB state store
-    * provider; wraps `body` — which must start AND fully drain its streaming
-    * query — with the provider set on the session, restoring the previous
-    * value after (the provider is captured per query at start).
+  /** Runs `body` with the SQL conf `settings` set on the session, then
+    * restores each key's previous value, or its absence. Streaming conf is
+    * captured per query at start, so `body` must start AND fully drain its
+    * streaming queries.
     */
-  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: commit the per-batch delta instead of a full
-    // RocksDB snapshot upload — snapshots still happen, but off the commit
-    // path (background maintenance), which is the production posture too
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      prevCl.fold(spark.conf.unset(clKey))(spark.conf.set(clKey, _))
-    }
+    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** Conf setting that writes streaming checkpoint files through Spark's
+    * `FileSystemBasedCheckpointFileManager` instead of its default
+    * FileContext-based one. Without libhadoop, the FileContext
+    * `rename(OVERWRITE)` resolves links by running `readlink`, several
+    * process starts for every checkpoint file; `FileSystem.rename` on a
+    * local disk is `File.renameTo`. Hadoop's local file system still runs
+    * `chmod` once for each file it creates. On other file systems
+    * `FileSystem.rename` need not replace an existing file atomically.
+    *
+    * Every session this program builds sets it (Bench, StreamBench, Verify,
+    * Explain, ScaleSmoke and the test session), so all their queries write
+    * checkpoints one way. [[withRocksDb]] and `ReferenceQueries.replayEvents`
+    * set it again for their scope: they are how a session built elsewhere,
+    * such as the benchmark harness's or a `SparkEntry` caller's, runs its
+    * streaming queries.
+    */
+  val checkpointFiles: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** The production streaming posture, scoped to `body` ([[withConf]]):
+    * RocksDB state (`transformWithState`, state-v2, runs only there) with
+    * changelog checkpointing, and [[checkpointFiles]].
+    */
+  def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // changelog checkpointing: commit the per-batch delta instead of a full
+      // RocksDB snapshot upload — snapshots still happen, but off the commit
+      // path (background maintenance), which is the production posture too
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      checkpointFiles)(body)
 
   /** Drains a streaming DataFrame into an in-memory table and returns it —
     * the test/bench harness for streaming runs (driver data is finite).

@@ -37,6 +37,7 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Map(graft.streaming.Streams.checkpointFiles))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -150,4 +150,15 @@ class StreamingSpec extends SparkTestBase {
     val finalized = batch.where(col("ws") + 3600 <= lit(maxTs - 600))
     assert(finalized.exceptAll(out).count() == 0, "a finalized window was not emitted")
   }
+
+  test("sessions write checkpoints through one manager; withRocksDb installs it for its scope") {
+    val (key, cls) = Streams.checkpointFiles
+    assert(spark.conf.get(key) == cls)
+    // a session built without the default, such as the benchmark harness's
+    spark.conf.unset(key)
+    try {
+      Streams.withRocksDb(spark)(assert(spark.conf.get(key) == cls))
+      assert(spark.conf.getOption(key).isEmpty)
+    } finally spark.conf.set(key, cls)
+  }
 }

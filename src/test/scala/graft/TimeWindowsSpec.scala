@@ -53,4 +53,18 @@ class TimeWindowsSpec extends SparkTestBase {
       assert(r.getLong(0) == Math.floorDiv(r.getLong(1), 1000000L))
     }
   }
+
+  test("eventsWithEpoch floors pre-1970 sub-second events read from parquet") {
+    import spark.implicits._
+    val dir = freshDir("pre1970")
+    // µs since the epoch: 1969-12-31 23:59:58.5, 23:59:59.999999, 1970-01-01 00:00:00.25
+    Seq((1L, -1500000L), (2L, -1L), (3L, 250000L)).toDF("event_id", "us")
+      .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+        lit(7L).as("user_id"), lit("view").as("event_type"), lit(1.0).as("value"),
+        lit("{}").as("props"))
+      .write.parquet(s"$dir/events.parquet")
+    val es = Tables.eventsWithEpoch(spark, dir).orderBy("event_id")
+      .select("es").as[Long].collect().toSeq
+    assert(es == Seq(-2L, -1L, 0L), s"floor epoch seconds, got $es")
+  }
 }
