@@ -112,4 +112,26 @@ final case class AggSpec(
     }
     (if (fn == AggFn.Avg) c else rounded(c)).as(alias)
   }
+
+  /** Names of the two columns the streaming pane ring emits per window for
+    * this aggregate: the merged SUM/MIN/MAX (null with no non-null input),
+    * and the count of rows (CNT) or of non-null inputs (the others).
+    */
+  private[graft] def mergedNames: (String, String) = (s"__m_v_$alias", s"__m_n_$alias")
+
+  /** Final value over [[mergedNames]] (same AVG determinism treatment as
+    * [[toColumn]]).
+    */
+  private[graft] def mergedCol: Column = {
+    val (v, n) = (col(mergedNames._1), col(mergedNames._2))
+    val c = fn match {
+      case AggFn.Cnt => n
+      case AggFn.Avg => roundTo match {
+        case Some(d) => Quant.q4(Quant.q4(v, d) / n, d)
+        case None    => v / n
+      }
+      case _ => v
+    }
+    (if (fn == AggFn.Avg) c else rounded(c)).as(alias)
+  }
 }

@@ -48,10 +48,10 @@ object TimeWindows {
     * fully hold the pane starting at `paneStart`: ws ∈ [p + pane − size, p],
     * ws a multiple of slide. All bounds are multiples of pane by
     * construction, and ceil-to-slide is written as floorTo(x + slide − 1,
-    * slide). The level-2 expansion of both pane paths (batch
-    * [[aggregatePaned]] and the streaming `Streams.windowAggPaned`).
+    * slide). The level-2 expansion of [[aggregatePaned]]; the streaming
+    * pane ring (`Streams.windowAggPaned`) walks the same bounds.
     */
-  private[graft] def paneWindowStarts(
+  private def paneWindowStarts(
       paneStart: Column, pane: Long, sizeSec: Long, slideSec: Long): Column =
     sequence(floorTo(paneStart + lit(pane - sizeSec + slideSec - 1), slideSec),
       floorTo(paneStart, slideSec), lit(slideSec))

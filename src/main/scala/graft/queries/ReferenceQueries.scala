@@ -864,20 +864,21 @@ object ReferenceQueries {
     // not a data-scaled shuffle: every stateful operator writes state/delta
     // files per partition per micro-batch, so 32 partitions on a replay this
     // size is pure checkpoint-I/O overhead (measured 16 s → ~5 s for the
-    // chained paned fixture at sf0.1). Size it to the replay and restore;
-    // checkpoint files go through Streams.checkpointFiles.
-    graft.streaming.Streams.withConf(s,
-        "spark.sql.shuffle.partitions" -> "4", graft.streaming.Streams.checkpointFiles) {
-      val q = buildAgg(stream).writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-          ms.addData(chunk.toSeq)
+    // chained paned fixture at sf0.1). Size it to the replay and restore.
+    // Every replay runs in the one streaming posture, Streams.withRocksDb.
+    graft.streaming.Streams.withRocksDb(s) {
+      graft.streaming.Streams.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+        val q = buildAgg(stream).writeStream.outputMode("append")
+          .format("memory").queryName(sink).start()
+        try {
+          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
+            ms.addData(chunk.toSeq)
+            q.processAllAvailable()
+          }
+          ms.addData(Seq(rows.last)) // apply the final watermark (see above)
           q.processAllAvailable()
-        }
-        ms.addData(Seq(rows.last)) // apply the final watermark (see above)
-        q.processAllAvailable()
-      } finally q.stop()
+        } finally q.stop()
+      }
     }
     s.table(sink)
   }
@@ -912,14 +913,11 @@ object ReferenceQueries {
 
   /** LightSaber's pane trick on the production streaming path, under the
     * batch oracle: [[replayEvents]] through
-    * [[graft.streaming.Streams.windowAggPaned]] — tumbling 10-min pane
-    * partials chained into a sliding (1 h, 10 min) stateful merge (Spark
-    * 3.4+ multi-stateful-operator watermark propagation), append mode,
-    * delay 0. Eviction cascades within one micro-batch (the downstream
-    * operator's late-record threshold is the PREVIOUS batch's watermark, so
-    * it accepts the upstream's same-batch pane emissions), making the
-    * emitted set exactly the windows with end ≤ max event time — same
-    * contract and oracle filter as [[qStreamTumbling]].
+    * [[graft.streaming.Streams.windowAggPaned]] — per-key rings of 10-min
+    * pane partials merged into sliding (1 h, 10 min) windows, append mode,
+    * delay 0. A window is emitted once the watermark reaches its end, so
+    * the emitted set is exactly the windows with end ≤ max event time —
+    * same contract and oracle filter as [[qStreamTumbling]].
     */
   val qStreamSlidingPaned = Fixture(
     "q_stream_sliding_paned",

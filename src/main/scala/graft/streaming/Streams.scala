@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 import org.apache.spark.sql.types._
-import graft.operators.{AggSpec, TimeWindows}
+import graft.operators.{AggFn, AggSpec, TimeWindows}
 
 /** Structured Streaming façade: the reference is a *stream* engine
   * (in-order tuple streams, SURVEY §1.1); every batch operator here also runs
@@ -94,53 +95,66 @@ object Streams {
       .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
   }
 
-  /** Pane-based sliding aggregation in streaming: the batch
-    * [[TimeWindows.aggregatePaned]] as two chained stateful aggregations
-    * (Spark 3.4+, append mode).
+  /** Pane-based sliding aggregation in streaming, as one event-time
+    * `transformWithState` operator: LightSaber's per-key pane ring. The
+    * plan is scan → one shuffle by key → the stateful operator, with one
+    * state store per trigger. Output is that of the batch
+    * [[TimeWindows.aggregatePaned]] over the windows the watermark has
+    * closed. `aggs` inputs are read as doubles, so SUM, MIN and MAX come
+    * out as doubles whatever the input type.
     *
-    * Level 1 partially aggregates rows into tumbling gcd-size panes with
-    * `window()` on the watermarked `ts`. Level 2 explodes each pane partial
-    * into the starts of the windows that fully hold it
-    * ([[TimeWindows.paneWindowStarts]], the batch path's expansion, planned
-    * as one Generate; `window()` on the pane column would plan an Expand
-    * with size/slide projections and code-generate it on every trigger)
-    * and merges the partials per window.
-    *
-    * Level 2's key is the window END, `timestamp_seconds(ws + size)`,
-    * carrying the watermark metadata of the level-1 `window` column. The
-    * state store therefore evicts, and append mode emits, a window exactly
-    * when the watermark reaches its end, the rule `window()` applies to
-    * its window struct. Output `ws` is that end minus size. Streaming
-    * state is partitioned on (window, keys), so unlike the batch path the
-    * expansion is shuffled; still a win whenever rows-per-pane×key
-    * exceeds 1.
+    *  - Key and state: the `keys` columns as one row; per key, one value holding
+    *    a ring of gcd(size, slide) pane slots (pane start, partial value and
+    *    non-null count per aggregate) and the end of the last window emitted.
+    *  - Fold and emit: each row folds into its pane ([[TimeWindows.epochBucket]]).
+    *    On input and on its timer, a key emits, in order, every window that
+    *    holds data, ends at or below the watermark and was not yet emitted;
+    *    evicts each pane whose last window has been emitted; and re-arms one
+    *    event-time timer at its next window end. The operator merges the
+    *    CNT/SUM/AVG/MIN/MAX partials; AVG's division and rounding stay in
+    *    Catalyst ([[AggSpec.mergedCol]]).
+    *  - Event time: the operator's event-time column is the PANE END, carrying
+    *    the watermark of `ts`. `transformWithState` drops input at or below
+    *    the (previous trigger's) watermark on that column, which is the late
+    *    rule of a tumbling pane aggregation: a row is late once its pane has
+    *    closed. Both are shifted by [[PaneRing.ShiftSec]] (year 1 maps to 0),
+    *    so that pre-1970 panes are not late against the first watermark, 0;
+    *    output `ws` is not shifted.
+    *  - State store: `transformWithState` runs only on RocksDB, so start the
+    *    query inside [[withRocksDb]].
     */
   def windowAggPaned(
       stream: DataFrame,
       sizeSec: Long,
       slideSec: Long,
       keys: Seq[String],
-      aggs: Seq[graft.operators.AggSpec],
+      aggs: Seq[AggSpec],
       watermark: String): DataFrame = {
     val pane = TimeWindows.gcd(sizeSec, slideSec)
-    val partials = aggs.flatMap(a => a.partialCols).distinct
-    val level1 = stream.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), s"$pane seconds") +: keys.map(col): _*)
-      .agg(partials.head._2.as(partials.head._1),
-           partials.tail.map { case (n, c) => c.as(n) }: _*)
-    val starts = TimeWindows.paneWindowStarts(
-      TimeWindows.epochSeconds(col("window.start")), pane, sizeSec, slideSec)
-    val windowEnd = timestamp_seconds(col("__ws") + lit(sizeSec))
-      .as("window", level1.schema("window").metadata)
-    // a projected column, not a grouping alias: the analyzer strips a
-    // grouping alias, metadata and all, and append mode needs the watermark
-    // on a key
-    level1.withColumn("__ws", explode(starts))
-      .select(windowEnd +: (keys ++ partials.map(_._1)).map(col): _*)
-      .groupBy(col("window") +: keys.map(col): _*)
-      .agg(aggs.head.finalCol, aggs.tail.map(_.finalCol): _*)
-      .withColumn("ws", unix_seconds(col("window")) - lit(sizeSec))
-      .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
+    // transformWithState needs a key: unkeyed windows share one constant key
+    val byKeys = if (keys.nonEmpty) keys else Seq("__all")
+    val shifted = (if (keys.nonEmpty) stream else stream.withColumn("__all", lit(0)))
+      .withColumn("__et", col("ts") + lit(java.time.Duration.ofSeconds(PaneRing.ShiftSec)))
+      .withWatermark("__et", watermark)
+    val paneStart = TimeWindows.epochBucket(col("ts"), pane)
+    val in = shifted.select(
+      paneStart.as("__pane") +:
+        timestamp_seconds(paneStart + lit(pane + PaneRing.ShiftSec))
+          .as("__end", shifted.schema("__et").metadata) +:
+        aggs.zipWithIndex.map { case (a, j) =>
+          (if (a.fn == AggFn.Cnt) lit(0.0) else a.input.cast("double")).as(s"__v$j")
+        } ++: byKeys.map(col): _*)
+    val keySchema = StructType(byKeys.map(in.schema(_)))
+    val outSchema = StructType(keySchema.fields ++
+      (StructField("ws", LongType, nullable = false) +: aggs.flatMap { a =>
+        val (v, n) = a.mergedNames
+        Seq(StructField(v, DoubleType), StructField(n, LongType, nullable = false))
+      }))
+    in.groupBy(byKeys.map(col): _*).as(Encoders.row(keySchema), Encoders.row(in.schema))
+      .transformWithState(
+        new PaneRing.Processor(pane, sizeSec, slideSec, aggs.map(_.fn).toArray),
+        TimeMode.EventTime(), OutputMode.Append())(Encoders.row(outSchema))
+      .select(col("ws") +: keys.map(col) ++: aggs.map(_.mergedCol): _*)
   }
 
   /** Stream-stream windowed θ-join (reference ThetaJoin →
@@ -186,8 +200,8 @@ object Streams {
     * `chmod` once for each file it creates. On other file systems
     * `FileSystem.rename` need not replace an existing file atomically.
     *
-    * Every session this program builds sets it (Bench, StreamBench, Verify,
-    * Explain, ScaleSmoke and the test session), so all their queries write
+    * Every session this program builds sets it (Bench, Verify, Explain,
+    * ScaleSmoke and the test session), so all their queries write
     * checkpoints one way. [[withRocksDb]] and `ReferenceQueries.replayEvents`
     * set it again for their scope: they are how a session built elsewhere,
     * such as the benchmark harness's or a `SparkEntry` caller's, runs its

@@ -137,9 +137,9 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming paned sliding agg (chained stateful aggs) emits finalized windows matching batch") {
     val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
+    val out = Streams.withRocksDb(spark)(Streams.runToTable(spark,
       Streams.windowAggPaned(stream, 3600, 60, Seq("event_type"), allFive, "10 minutes"),
-      "s_paned", "append")
+      "s_paned", "append"))
     val batch = TimeWindows.aggregatePaned(
       Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), allFive)
     assert(out.count() > 0, "no finalized windows emitted")
