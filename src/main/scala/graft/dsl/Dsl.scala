@@ -63,7 +63,10 @@ object ast {
   final case class Projection(exprs: Seq[(Expr, String)]) extends Op
   /** §2.4 Aggregation(window, fns, attrs, groupBy) — reference Aggregation.h:33-109.
     * Range windows need `tsCol`; row windows need `orderBy` (unique ordering)
-    * and group-by keys must be plain attributes.
+    * and group-by keys must be plain attributes. A sliding range window
+    * (slide < size) runs pane-sliced, where SUM, AVG, MIN and MAX take only
+    * integral or floating-point inputs: a DECIMAL, timestamp, date or string
+    * input fails when the DataFrame is built, naming the input.
     */
   final case class Aggregation(
       window: WindowDef,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Aggregation function surface of the reference engine.
   *
@@ -113,16 +114,29 @@ final case class AggSpec(
     (if (fn == AggFn.Avg) c else rounded(c)).as(alias)
   }
 
-  /** Names of the two columns the streaming pane ring emits per window for
-    * this aggregate: the merged SUM/MIN/MAX (null with no non-null input),
-    * and the count of rows (CNT) or of non-null inputs (the others).
+  /** This aggregate's pane partial ([[partialCols]]) as the pane ring reads
+    * it: the value (none for CNT) and the count, which for SUM, MIN and MAX
+    * only says whether the pane had a non-null input.
+    */
+  private[graft] def partialValueCount: (Column, Column) = fn match {
+    case AggFn.Cnt => (lit(null), col(s"__p_cnt_$alias"))
+    case AggFn.Avg => (col(s"__p_sum_$alias"), col(s"__p_cnt_$alias"))
+    case _ =>
+      val v = col(partialCols.head._1)
+      (v, when(v.isNull, 0L).otherwise(1L))
+  }
+
+  /** Names of the two columns the pane ring emits per window for this
+    * aggregate: the merged SUM/MIN/MAX (null with no non-null input), and
+    * the count of rows (CNT) or of non-null inputs (AVG).
     */
   private[graft] def mergedNames: (String, String) = (s"__m_v_$alias", s"__m_n_$alias")
 
-  /** Final value over [[mergedNames]] (same AVG determinism treatment as
-    * [[toColumn]]).
+  /** Final value over [[mergedNames]] for an `input` of type `inputType`
+    * (same AVG determinism treatment as [[toColumn]]): SUM comes out as
+    * Spark's `sum` gives it, MIN and MAX in the input's type.
     */
-  private[graft] def mergedCol: Column = {
+  private[graft] def mergedCol(inputType: DataType): Column = {
     val (v, n) = (col(mergedNames._1), col(mergedNames._2))
     val c = fn match {
       case AggFn.Cnt => n
@@ -130,7 +144,8 @@ final case class AggSpec(
         case Some(d) => Quant.q4(Quant.q4(v, d) / n, d)
         case None    => v / n
       }
-      case _ => v
+      case AggFn.Min | AggFn.Max => v.cast(inputType)
+      case AggFn.Sum => v
     }
     (if (fn == AggFn.Avg) c else rounded(c)).as(alias)
   }

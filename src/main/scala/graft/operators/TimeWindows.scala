@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Time-based (RANGE_BASED) tumbling/sliding window aggregation.
   *
@@ -22,10 +23,14 @@ import org.apache.spark.sql.functions._
   *    Level 1 partially aggregates rows into gcd-size panes, the pane id being
   *    integer floor division on the stored microseconds ([[EpochBucket]]; no
   *    zone conversion, no double math), and map-side combine shrinks this to
-  *    ~|panes × keys| rows; level 2 expands *panes* (not rows)
-  *    to the windows they belong to and merges algebraic partials. Exact for
-  *    CNT/SUM/AVG/MIN/MAX. At scale this cuts shuffle volume by the ratio of
-  *    rows-per-pane and is the strategy of choice for sliding windows.
+  *    ~|panes × keys| rows. Level 2 brings each key's pane partials into one
+  *    partition, sorts them by pane start, and merges them in one pass
+  *    through a per-key ring of panes ([[PaneRing]], the kernel the
+  *    streaming twin runs too): a window is merged from its size/pane panes
+  *    and emitted once a later pane arrives. No pane is copied once per
+  *    window. Exact for CNT/SUM/AVG/MIN/MAX; integral SUM/MIN/MAX fold as
+  *    longs. At scale this cuts shuffle volume by the ratio of rows-per-pane
+  *    and is the strategy of choice for sliding windows.
   *
   * Output schema: `ws: long` (window-start epoch seconds), group keys, then one
   * column per [[AggSpec]].
@@ -40,21 +45,6 @@ object TimeWindows {
 
   /** Epoch seconds (floor), before 1970 too; the oracle's `SqlGen.es`. */
   def epochSeconds(ts: Column): Column = epochBucket(ts, 1L)
-
-  /** Largest multiple of `b` ≤ `a`, in long arithmetic (pmod is a floor mod). */
-  private def floorTo(a: Column, b: Long): Column = a - pmod(a, lit(b))
-
-  /** Starts (epoch seconds, ascending) of the (size, slide) windows that
-    * fully hold the pane starting at `paneStart`: ws ∈ [p + pane − size, p],
-    * ws a multiple of slide. All bounds are multiples of pane by
-    * construction, and ceil-to-slide is written as floorTo(x + slide − 1,
-    * slide). The level-2 expansion of [[aggregatePaned]]; the streaming
-    * pane ring (`Streams.windowAggPaned`) walks the same bounds.
-    */
-  private def paneWindowStarts(
-      paneStart: Column, pane: Long, sizeSec: Long, slideSec: Long): Column =
-    sequence(floorTo(paneStart + lit(pane - sizeSec + slideSec - 1), slideSec),
-      floorTo(paneStart, slideSec), lit(slideSec))
 
   /** Native-window strategy. `keys` are column names present on `df`. */
   def aggregate(
@@ -73,7 +63,8 @@ object TimeWindows {
   }
 
   /** Pane-based two-level strategy (gcd slicing). Same output as [[aggregate]]
-    * for the algebraic AggFn surface.
+    * for the algebraic AggFn surface; SUM, AVG, MIN and MAX take integral or
+    * floating-point inputs.
     */
   def aggregatePaned(
       df: DataFrame,
@@ -82,34 +73,37 @@ object TimeWindows {
       slideSec: Long,
       keys: Seq[String],
       aggs: Seq[AggSpec]): DataFrame = {
-    val pane = gcd(sizeSec, slideSec)
+    val (kernel, types, lanes) = PaneRing.kernel(df, sizeSec, slideSec, aggs)
     val partials = aggs.flatMap(_.partialCols).distinct
 
     // Level 1: per-pane partial aggregation (Catalyst adds map-side combine).
-    val paneCol = epochBucket(ts, pane).as("__pane")
+    val paneCol = epochBucket(ts, kernel.pane).as("__pane")
     val level1 = df
       .groupBy(paneCol +: keys.map(col): _*)
       .agg(partials.head._2.as(partials.head._1),
            partials.tail.map { case (n, c) => c.as(n) }: _*)
 
-    // For keyed windows, re-shuffle the (small) pane partials by key BEFORE
-    // expansion: HashPartitioning(keys) satisfies the level-2 groupBy's
-    // ClusteredDistribution(ws, keys), so Catalyst inserts no further
-    // exchange and the size/slide-fold expansion never crosses the network —
-    // the pane-merge locality of the reference's slot ring, in Spark terms.
-    val colocated =
-      if (keys.nonEmpty) level1.repartition(keys.map(col): _*) else level1
-    val expanded = colocated.withColumn("ws",
-      explode(paneWindowStarts(col("__pane"), pane, sizeSec, slideSec)))
-
-    // Level 2: merge pane partials per window.
-    expanded
-      .groupBy(col("ws") +: keys.map(col): _*)
-      .agg(aggs.head.finalCol, aggs.tail.map(_.finalCol): _*)
-      .select(col("ws") +: keys.map(col) ++: aggs.map(a => col(a.alias)): _*)
+    // Level 2: all of a key's pane partials in one partition (one partition
+    // when unkeyed), in pane order: a sort on one long, which Spark radix
+    // sorts. One pass then merges each key's ring of panes into windows.
+    val byKey =
+      if (keys.nonEmpty) level1.repartition(keys.map(col): _*) else level1.repartition(1)
+    val in = byKey.sortWithinPartitions("__pane").select(col("__pane") +:
+      (PaneRing.valueCols(aggs)((a, j) => a.partialValueCount._1.cast(lanes(j))) ++
+        PaneRing.countCols(aggs)((a, _) => a.partialValueCount._2)) ++:
+      keys.map(col): _*)
+    val keySchema = StructType(keys.map(in.schema(_)))
+    in.mapPartitions(PaneRing.windows(kernel, keySchema))(
+        Encoders.row(PaneRing.outputSchema(keySchema, aggs, lanes)))
+      .select(col("ws") +: keys.map(col) ++: PaneRing.merged(aggs, types): _*)
   }
 
-  /** Picks paned execution for genuinely sliding windows, native for tumbling. */
+  /** Picks paned execution for genuinely sliding windows, native for tumbling.
+    * A sliding window's SUM, AVG, MIN and MAX therefore take only integral or
+    * floating-point inputs (see [[aggregatePaned]]); a DECIMAL, timestamp,
+    * date or string input fails when the DataFrame is built. Tumbling
+    * windows take any input [[aggregate]] takes.
+    */
   def auto(
       df: DataFrame,
       ts: Column,

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
 
 /** Optimizer rule: rewrites a native sliding-`window()` aggregation — which
   * Spark plans as an Expand of size/slide projections per input row followed
-  * by one Aggregate — into the pane-based two-level form
-  * (TimeWindows.aggregatePaned's plan, LightSaber's pane slicing):
+  * by one Aggregate — into a pane-based two-level form (LightSaber's pane
+  * slicing as a logical rewrite; `TimeWindows.aggregatePaned` merges its
+  * panes through a per-key ring instead of this Generate):
   *
   *   Aggregate(window, keys, Expand(n projections, child))
   *     ⇒ Aggregate(ws, keys, merge-aggs,

@@ -50,10 +50,12 @@ object StreamingGapFill {
     *                    MapType with non-string keys ("Unexpected type
     *                    MapType(LongType, ...)"), and the entry count is
     *                    O(lateness/size), so linear access is fine
+    * @param timer       expiry of the key's one armed timer ([[NoTimer]]
+    *                    for none)
     */
   case class GapState(
       lo: Long, closedUpTo: Long, started: Boolean,
-      open: Seq[(Long, Long, Double)]) {
+      open: Seq[(Long, Long, Double)], timer: Long = NoTimer) {
     def openGet(wid: Long): (Long, Double) =
       open.find(_._1 == wid).map(e => (e._2, e._3)).getOrElse((0L, 0.0))
     def openUpdated(wid: Long, cnt: Long, sum: Double): Seq[(Long, Long, Double)] =
@@ -61,16 +63,19 @@ object StreamingGapFill {
     def openRemoved(wid: Long): Seq[(Long, Long, Double)] =
       open.filterNot(_._1 == wid)
   }
+  val NoTimer: Long = Long.MinValue
+
   case class WinOut(event_type: String, ws: Long, cnt: Long, sum_v: Option[Double])
 
   private class GapFillProcessor(sizeSec: Long, watermarkDelaySec: Long)
       extends StatefulProcessor[String, InRow, WinOut] {
     private val sizeMs = sizeSec * 1000L
+    // derived once, when the query is built, not by reflection in every task
+    private val encoder = Encoders.product[GapState]
     @transient private var st: ValueState[GapState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[GapState](
-        "gap", Encoders.product[GapState], TTLConfig.NONE)
+      st = getHandle.getValueState[GapState]("gap", encoder, TTLConfig.NONE)
 
     /** Emit every window in [frontier+1 ∨ lo, upTo], real or bubble. */
     private def emitThrough(
@@ -90,12 +95,16 @@ object StreamingGapFill {
     /** Re-arm the single per-key timer for the end of the next window to
       * close (trailing bubbles keep flowing as the watermark advances);
       * must be strictly above the current watermark or it would fire
-      * immediately forever.
+      * immediately forever. The timer armed before is deleted unless it is
+      * `fired`, the one being handled, which Spark deletes itself.
       */
-    private def rearm(s: GapState, wm: Long): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(
-        math.max((math.max(s.closedUpTo + 1, s.lo) + 1) * sizeMs, wm + 1L))
+    private def rearm(s: GapState, wm: Long, fired: Long): GapState = {
+      val at = math.max((math.max(s.closedUpTo + 1, s.lo) + 1) * sizeMs, wm + 1L)
+      if (s.timer != at) {
+        if (s.timer != NoTimer && s.timer != fired) getHandle.deleteTimer(s.timer)
+        getHandle.registerTimer(at)
+      }
+      s.copy(timer = at)
     }
 
     override def handleInputRows(
@@ -113,7 +122,7 @@ object StreamingGapFill {
           // first window, or the watermark's own close line — so a
           // subsequent EARLIER row still within the lateness bound
           // (wid > wMaxWm) lands in an open window, never dropped
-          s = GapState(wid, math.min(wid - 1, wMaxWm), started = true, Seq.empty)
+          s = GapState(wid, math.min(wid - 1, wMaxWm), started = true, Seq.empty, s.timer)
         if (wid > s.closedUpTo) {
           if (watermarkDelaySec == 0L && wid > math.max(s.closedUpTo + 1, s.lo))
             s = emitThrough(key, s, wid - 1, out) // in-order fast path
@@ -131,8 +140,7 @@ object StreamingGapFill {
       // drops rows with ts < watermark, so no future row can land in a
       // window whose end ≤ watermark.
       if (s.started) s = emitThrough(key, s, wMaxWm, out)
-      st.update(s)
-      rearm(s, wm)
+      st.update(rearm(s, wm, NoTimer))
       out.iterator
     }
 
@@ -144,8 +152,7 @@ object StreamingGapFill {
       var s = if (st.exists()) st.get()
         else GapState(0L, Long.MinValue, started = false, Seq.empty)
       if (s.started) s = emitThrough(key, s, wMaxWm, out)
-      st.update(s)
-      rearm(s, wm)
+      st.update(rearm(s, wm, info.getExpiryTimeInMs()))
       out.iterator
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 import org.apache.spark.sql.types._
-import graft.operators.{AggFn, AggSpec, TimeWindows}
+import graft.operators.{AggFn, AggSpec, PaneRing, TimeWindows}
 
 /** Structured Streaming façade: the reference is a *stream* engine
   * (in-order tuple streams, SURVEY §1.1); every batch operator here also runs
@@ -100,24 +100,25 @@ object Streams {
     * plan is scan → one shuffle by key → the stateful operator, with one
     * state store per trigger. Output is that of the batch
     * [[TimeWindows.aggregatePaned]] over the windows the watermark has
-    * closed. `aggs` inputs are read as doubles, so SUM, MIN and MAX come
-    * out as doubles whatever the input type.
+    * closed, with the same types: SUM, AVG, MIN and MAX take integral
+    * inputs (folded exactly as longs) or floating-point ones (as doubles).
     *
     *  - Key and state: the `keys` columns as one row; per key, one value holding
     *    a ring of gcd(size, slide) pane slots (pane start, partial value and
-    *    non-null count per aggregate) and the end of the last window emitted.
+    *    non-null count per aggregate), the end of the last window emitted and
+    *    the expiry of the key's one timer.
     *  - Fold and emit: each row folds into its pane ([[TimeWindows.epochBucket]]).
     *    On input and on its timer, a key emits, in order, every window that
     *    holds data, ends at or below the watermark and was not yet emitted;
     *    evicts each pane whose last window has been emitted; and re-arms one
-    *    event-time timer at its next window end. The operator merges the
-    *    CNT/SUM/AVG/MIN/MAX partials; AVG's division and rounding stay in
-    *    Catalyst ([[AggSpec.mergedCol]]).
+    *    event-time timer at its next window end. Fold, merge, emit and
+    *    eviction are [[PaneRing.Kernel]]'s, shared with the batch twin; AVG's
+    *    division and rounding stay in Catalyst ([[AggSpec.mergedCol]]).
     *  - Event time: the operator's event-time column is the PANE END, carrying
     *    the watermark of `ts`. `transformWithState` drops input at or below
     *    the (previous trigger's) watermark on that column, which is the late
     *    rule of a tumbling pane aggregation: a row is late once its pane has
-    *    closed. Both are shifted by [[PaneRing.ShiftSec]] (year 1 maps to 0),
+    *    closed. Both are shifted by [[PaneRingProcessor.ShiftSec]] (year 1 maps to 0),
     *    so that pre-1970 panes are not late against the first watermark, 0;
     *    output `ws` is not shifted.
     *  - State store: `transformWithState` runs only on RocksDB, so start the
@@ -130,31 +131,25 @@ object Streams {
       keys: Seq[String],
       aggs: Seq[AggSpec],
       watermark: String): DataFrame = {
-    val pane = TimeWindows.gcd(sizeSec, slideSec)
+    val (kernel, types, lanes) = PaneRing.kernel(stream, sizeSec, slideSec, aggs)
     // transformWithState needs a key: unkeyed windows share one constant key
     val byKeys = if (keys.nonEmpty) keys else Seq("__all")
     val shifted = (if (keys.nonEmpty) stream else stream.withColumn("__all", lit(0)))
-      .withColumn("__et", col("ts") + lit(java.time.Duration.ofSeconds(PaneRing.ShiftSec)))
+      .withColumn("__et", col("ts") + lit(java.time.Duration.ofSeconds(PaneRingProcessor.ShiftSec)))
       .withWatermark("__et", watermark)
-    val paneStart = TimeWindows.epochBucket(col("ts"), pane)
+    val paneStart = TimeWindows.epochBucket(col("ts"), kernel.pane)
     val in = shifted.select(
       paneStart.as("__pane") +:
-        timestamp_seconds(paneStart + lit(pane + PaneRing.ShiftSec))
+        timestamp_seconds(paneStart + lit(kernel.pane + PaneRingProcessor.ShiftSec))
           .as("__end", shifted.schema("__et").metadata) +:
-        aggs.zipWithIndex.map { case (a, j) =>
-          (if (a.fn == AggFn.Cnt) lit(0.0) else a.input.cast("double")).as(s"__v$j")
-        } ++: byKeys.map(col): _*)
+        PaneRing.valueCols(aggs)((a, j) =>
+          if (a.fn == AggFn.Cnt) lit(null).cast(LongType) else a.input.cast(lanes(j))) ++:
+        byKeys.map(col): _*)
     val keySchema = StructType(byKeys.map(in.schema(_)))
-    val outSchema = StructType(keySchema.fields ++
-      (StructField("ws", LongType, nullable = false) +: aggs.flatMap { a =>
-        val (v, n) = a.mergedNames
-        Seq(StructField(v, DoubleType), StructField(n, LongType, nullable = false))
-      }))
     in.groupBy(byKeys.map(col): _*).as(Encoders.row(keySchema), Encoders.row(in.schema))
-      .transformWithState(
-        new PaneRing.Processor(pane, sizeSec, slideSec, aggs.map(_.fn).toArray),
-        TimeMode.EventTime(), OutputMode.Append())(Encoders.row(outSchema))
-      .select(col("ws") +: keys.map(col) ++: aggs.map(_.mergedCol): _*)
+      .transformWithState(new PaneRingProcessor(kernel), TimeMode.EventTime(), OutputMode.Append())(
+        Encoders.row(PaneRing.outputSchema(keySchema, aggs, lanes)))
+      .select(col("ws") +: keys.map(col) ++: PaneRing.merged(aggs, types): _*)
   }
 
   /** Stream-stream windowed θ-join (reference ThetaJoin →

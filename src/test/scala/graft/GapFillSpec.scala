@@ -6,6 +6,34 @@ import graft.streaming.{Streams, StreamingGapFill}
 
 class GapFillSpec extends SparkTestBase {
 
+  /** Runs `body`, returning the WARN (or worse) messages Spark's timer
+    * state (`TimerStateImpl`) logged meanwhile.
+    */
+  private def timerWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith(".TimerStateImpl") && e.getLevel.isMoreSpecificThan(Level.WARN))
+          got.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    got.toArray(Array.empty[String]).toSeq
+  }
+
   test("gaps between a key's first and last window emit cnt=0, sum=NULL") {
     import spark.implicits._
     val agg = Seq(
@@ -80,6 +108,38 @@ class GapFillSpec extends SparkTestBase {
     val got = spark.table("s_gapfill")
     assertSameRows(got, expected)
     assert(got.where(col("cnt") === 0).count() > 0, "no bubble windows exercised")
+  }
+
+  test("fired timers re-arm without deleting themselves: no TimerStateImpl warnings") {
+    import graft.sources.Sources
+    import spark.implicits._
+    val (ms, df) = Sources.replay(spark)
+    val out = StreamingGapFill
+      .tumblingWithBubbles(spark, df.select(col("event_type"), col("es"), col("value"), col("ts")), 600L)
+      .toDF().select("event_type", "ws", "cnt", "sum_v")
+    val warnings = timerWarnings {
+      Streams.withRocksDb(spark) {
+        val q = out.writeStream.outputMode("append")
+          .format("memory").queryName("s_gapfill_timers").start()
+        try {
+          ms.addData(Sources.EventRow(1, 100, 1, "a", 1.0), Sources.EventRow(2, 100, 1, "b", 2.0))
+          q.processAllAvailable()
+          // the watermark moves to 3000: key b gets no row, so only its
+          // timers close its windows 0..2400, one fired timer each
+          ms.addData(Sources.EventRow(3, 3000, 1, "a", 4.0))
+          q.processAllAvailable()
+          val deadline = System.currentTimeMillis() + 30000
+          while (System.currentTimeMillis() < deadline &&
+            spark.table("s_gapfill_timers").where(col("event_type") === "b").count() < 5)
+            Thread.sleep(200)
+        } finally q.stop()
+      }
+    }
+    val b = spark.table("s_gapfill_timers").where(col("event_type") === "b")
+      .as[(String, Long, Long, Option[Double])].collect().toSet
+    assert(b == Set(("b", 0L, 1L, Some(2.0))) ++ (600L to 2400L by 600L).map(w => ("b", w, 0L, None)),
+      s"key b: $b")
+    assert(warnings.isEmpty, s"${warnings.length} timer warnings, first: ${warnings.headOption}")
   }
 
   test("lateness bound > 0: out-of-order rows within the bound are counted; windows close on watermark only") {

@@ -17,7 +17,11 @@ import graft.operators._
   * duplicate timestamps, gaps of empty panes, null keys, no keys, and
   * `slide ∤ size` shapes. An NTZ `ts` is bucketed as its wall clock read as
   * UTC, so under a non-UTC session paned and native must agree with each
-  * other and with the native result under UTC.
+  * other and with the native result under UTC. Further cases hold int and
+  * long values (whose output types must be `aggregate`'s), NaN values
+  * (MIN/MAX in Spark's NaN-last order), and sparse events: gaps longer than
+  * the window, so a key's pane ring empties and restarts, and keys with a
+  * single pane.
   *
   * The seed is random per run and printed on failure; set GRAFT_PROP_SEED to
   * the printed value to replay it.
@@ -80,6 +84,41 @@ class TimeWindowsPropSpec extends SparkTestBase {
     df.withColumn("ts", if (c.ntz) col("ntz") else timestamp_micros(col("us")))
   }
 
+  /** Values of one type: int or long (cast from the drawn ints), or
+    * double with NaN in place of the values at every second or third
+    * microsecond, so that whole panes hold only NaN.
+    */
+  private val genValues: Gen[Values] = Gen.oneOf(
+    Values(IntegerType, nanEvery = 0), Values(LongType, nanEvery = 0),
+    Values(DoubleType, nanEvery = 2), Values(DoubleType, nanEvery = 3))
+
+  private def typed(s: SparkSession, c: Case, v: Values): DataFrame = {
+    val df = frame(s, c)
+    if (v.nanEvery > 0)
+      df.withColumn("value", when(col("us") % v.nanEvery === 0, lit(Double.NaN)).otherwise(col("value")))
+    else df.withColumn("value", col("value").cast(v.dt))
+  }
+
+  /** Sparse events: three bursts, each for one key (null, "a" or "b") at one
+    * to four starts more than a window apart, so a key's ring empties
+    * between them; at each start, one to four events at one instant (a
+    * single pane) or within 5 s.
+    */
+  private def genSparse(size: Long): Gen[Seq[Ev]] = for {
+    base <- Gen.oneOf(-15L * 365 * Day, 0L, 19800L * Day)
+    bursts <- Gen.listOfN(3, for {
+      key <- Gen.oneOf(None, Some("a"), Some("b"))
+      gaps <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(size + 1, 3 * size)))
+      width <- Gen.oneOf(0L, 5L * Sec)
+      n <- Gen.choose(1, 4)
+    } yield (key, gaps, width, n))
+    evs <- Gen.sequence[Seq[Ev], Ev](bursts.flatMap { case (key, gaps, width, n) =>
+      gaps.scanLeft(0L)(_ + _ * Sec).map { at =>
+        Gen.choose(0L, width).flatMap(d => Gen.choose(-50, 100).map(v => Ev(key, base + at + d, v)))
+      }.flatMap(g => Seq.fill(n)(g))
+    })
+  } yield evs
+
   private def keys(c: Case): Seq[String] = if (c.keyed) Seq("k") else Seq.empty
 
   private def rows(df: DataFrame): Vector[String] =
@@ -90,6 +129,17 @@ class TimeWindowsPropSpec extends SparkTestBase {
 
   private def native(s: SparkSession, c: Case): Vector[String] =
     rows(TimeWindows.aggregate(frame(s, c), col("ts"), c.size, c.slide, keys(c), aggs))
+
+  /** aggregatePaned == aggregate over `df`, rows and column types. */
+  private def sameAsNative(c: Case, df: DataFrame): Prop = {
+    val (p, n) = (TimeWindows.aggregatePaned(df, col("ts"), c.size, c.slide, keys(c), aggs),
+      TimeWindows.aggregate(df, col("ts"), c.size, c.slide, keys(c), aggs))
+    // names and types; `aggregate`'s ws is nullable, the ring's is not
+    val (pt, nt) = (p.schema.map(f => f.name -> f.dataType), n.schema.map(f => f.name -> f.dataType))
+    val (got, want) = (rows(p), rows(n))
+    ((pt == nt) :| s"$c\npaned schema:  $pt\nnative schema: $nt") &&
+      ((got == want) :| s"$c\npaned:  $got\nnative: $want")
+  }
 
   private def epochSecondsHold(s: SparkSession, c: Case): Prop = {
     val got = frame(s, c).select(col("us"), TimeWindows.epochSeconds(col("ts")))
@@ -133,10 +183,31 @@ class TimeWindowsPropSpec extends SparkTestBase {
         epochSecondsHold(zoned, c)
     })
   }
+
+  test("generated int, long and NaN-holding double values: aggregatePaned == aggregate, types too") {
+    val gen = for { c <- genCase; v <- genValues } yield (c, v)
+    check(20)(Prop.forAllNoShrink(gen) { case (c, v) =>
+      sameAsNative(c, typed(spark, c, v)) :| s"values $v"
+    })
+  }
+
+  test("sparse events: gaps longer than size restart the rings, single-pane keys") {
+    val gen = for {
+      shape <- Gen.oneOf((3600L, 60L), (300L, 120L), (120L, 60L))
+      evs <- genSparse(shape._1)
+      keyed <- Gen.frequency(3 -> true, 1 -> false)
+      ntz <- Gen.oneOf(true, false)
+      v <- genValues
+    } yield (Case(evs, shape._1, shape._2, keyed, ntz), v)
+    check(15)(Prop.forAllNoShrink(gen) { case (c, v) =>
+      sameAsNative(c, typed(spark, c, v)) :| s"values $v"
+    })
+  }
 }
 
 object TimeWindowsPropSpec {
   private final case class Ev(key: Option[String], us: Long, value: Int)
   private final case class Case(
       events: Seq[Ev], size: Long, slide: Long, keyed: Boolean, ntz: Boolean)
+  private final case class Values(dt: DataType, nanEvery: Long)
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.{GenerateExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -7,7 +10,7 @@ import graft.operators._
   * Spark's native window() expansion — the core LightSaber-equivalence
   * invariant (SURVEY §2.4 A12/A13).
   */
-class TimeWindowsSpec extends SparkTestBase {
+class TimeWindowsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def src = Tables.events(spark, sfDir)
 
@@ -24,6 +27,15 @@ class TimeWindowsSpec extends SparkTestBase {
       TimeWindows.aggregatePaned(src, col("ts"), 3600, 60, Seq("event_type"), allAggs))
   }
 
+  test("paned == native, binary key") {
+    // the pane ring looks keys up by value: equal byte arrays are one key
+    val bin = src.withColumn("k", col("event_type").cast("binary"))
+    def keyAsString(df: org.apache.spark.sql.DataFrame) = df.withColumn("k", col("k").cast("string"))
+    assertSameRows(
+      keyAsString(TimeWindows.aggregate(bin, col("ts"), 3600, 60, Seq("k"), allAggs)),
+      keyAsString(TimeWindows.aggregatePaned(bin, col("ts"), 3600, 60, Seq("k"), allAggs)))
+  }
+
   test("paned == native, global sliding window with coarse gcd pane") {
     // size 1800 / slide 120 → pane = gcd = 120 < slide exercises pane<slide math.
     assertSameRows(
@@ -35,6 +47,24 @@ class TimeWindowsSpec extends SparkTestBase {
     assertSameRows(
       TimeWindows.aggregate(src, col("ts"), 600, 600, Seq("event_type"), allAggs),
       TimeWindows.aggregatePaned(src, col("ts"), 600, 600, Seq("event_type"), allAggs))
+  }
+
+  test("sliding aggregatePaned plans no Generate and sorts on __pane only") {
+    Seq(Seq("event_type"), Seq.empty[String]).foreach { keys =>
+      val df = TimeWindows.aggregatePaned(src, col("ts"), 3600, 60, keys, allAggs)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(collect(plan) { case g: GenerateExec => g }.isEmpty, s"a Generate in\n$plan")
+      val sorts = collect(plan) { case s: SortExec => s }
+      assert(sorts.nonEmpty, s"no Sort in\n$plan")
+      sorts.foreach { s =>
+        val onPane = s.sortOrder.map(_.child) match {
+          case Seq(a: Attribute) => a.name == "__pane"
+          case _ => false
+        }
+        assert(!s.global && onPane, s"keys $keys: a sort on ${s.sortOrder} in\n$plan")
+      }
+    }
   }
 
   test("sliding window count: every row lands in size/slide windows") {
