@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus.toString
     // Wall-clock time box (seconds). The r16 artifact was LOST to a driver
     // timeout (rc 124) after ~75 min: a bench that cannot finish inside its
     // caller's window is worth less than a truncated one that can. Every
@@ -18,16 +18,7 @@ object Bench {
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
     def leftS: Double = budgetS - elapsedS
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // 50 distinct query plans thrash the default 100-entry generated-class
-      // cache; evicted classes force re-JIT mid-run and charge one query for
-      // another's codegen. Static conf — must be set before session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config(Map(graft.streaming.Streams.checkpointFiles))
-      .getOrCreate()
+    val spark = LocalSession()
     // ERROR, not WARN: the r16 kill tail was a wall of streaming WARN lines
     // that pushed every parseable byte out of the driver's 2000-char stdout
     // window. With incremental emission (below) the LAST printed compact

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan/timing inspector:
   * runMain graft.Explain <sfDir> <query> [explain|time] [iters]
   */
@@ -12,15 +10,7 @@ object Explain {
     val mode = if (args.length > 2) args(2) else "time"
     // args(3) is the out DIR in dump mode and the iteration COUNT elsewhere
     val iters = if (args.length > 3) args(3).toIntOption.getOrElse(2) else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Map(graft.streaming.Streams.checkpointFiles))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     mode match {
       case "explain" => SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       case "dump" =>

@@ -30,16 +30,7 @@ object ScaleSmoke {
     val dest = args(1)
     val factor = args(2).toInt
     val queries = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")
-      .config(Map(graft.streaming.Streams.checkpointFiles))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val OFF = 10000000L
     def replicate(df: DataFrame, idCols: Seq[String]): DataFrame =

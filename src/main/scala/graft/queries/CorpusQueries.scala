@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.Replay
 import OracleSql._
 
 /** Text-analysis, dedup (exact / n-gram / MinHash / SimHash / embedding),
@@ -78,6 +79,20 @@ object CorpusQueries {
       |   min(doc_id) AS keeper_id, count(*) AS n_copies
       | FROM documents GROUP BY 1""".stripMargin))
 
+  /** `documents`' (doc_id, text), the input of the doc-id-ordered dedup
+    * streams.
+    */
+  private def docIdsAndText(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id").cast("long").as("doc_id"), col("text"))
+
+  /** Runs the MinHash dedup chain's query: its chained watermarked
+    * stateful stages trip Spark's global-watermark heuristic, which is
+    * sound here (see StreamingMinhashDedup's scaladoc).
+    */
+  private def withMinhashChain[T](s: SparkSession)(body: => T): T =
+    graft.streaming.Streams.withConf(s,
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false")(body)
+
   /** Streaming exact dedup under the batch oracle: the documents table is
     * replayed as four event-time-ordered micro-batches through
     * [[graft.streaming.StreamingDedup.firstSeen]] (watermark delay covers
@@ -91,38 +106,14 @@ object CorpusQueries {
     */
   val qDedupStreamFirstSeen = Fixture(
     "q_dedup_stream_first_seen",
-    (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    (s, d) => Replay(s, Replay.parts(docIdsAndText(s, d), 4, "doc_id"),
+        "stream_first_seen") { docs =>
       // +1s: the initial watermark is epoch 0, and a row AT the watermark is
       // already late — doc_id 0 at timestamp_micros(0) would be dropped
-      val stream = ms.toDF().toDF("doc_id", "text")
-        .withColumn("ts", timestamp_micros(col("doc_id") + 1000000L))
-      val deduped = graft.streaming.StreamingDedup
+      val stream = docs.withColumn("ts", timestamp_micros(col("doc_id") + 1000000L))
+      graft.streaming.StreamingDedup
         .firstSeen(stream, "text", "ts", "1 hour")
         .select(TextFunctions.fingerprintMd5(col("text")).as("fp"))
-      // unique sink name: attempts in the same session (Explain/Bench loops)
-      // must not collide on the memory-sink registration
-      val sink = s"stream_first_seen_${System.nanoTime}"
-      // state partitions sized to the replay, restored after — same
-      // rationale as ReferenceQueries.replayEvents
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = deduped.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some("""SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
       | FROM documents""".stripMargin))
@@ -141,52 +132,25 @@ object CorpusQueries {
     */
   val qDedupStreamMinhash = Fixture(
     "q_dedup_stream_minhash",
-    (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      // +1s: the initial watermark is epoch 0, and a row AT the watermark
-      // is already late (same convention as q_dedup_stream_first_seen)
-      // spread the replay across cores BEFORE the signature projection: a
-      // MemoryStream addData block is ONE partition, which would run the
-      // whole 128-hash MinHash family single-threaded (a real source's
-      // scan splits provide this parallelism for free)
-      val stream = ms.toDF().repartition(16).toDF("doc_id", "text")
-        .withColumn("ts", timestamp_micros(col("doc_id") + 1000000L))
-      val kept = graft.streaming.StreamingMinhashDedup
-        .firstSeen(s, stream, "doc_id", "text", n = 3, minJ = 0.8,
-          tsCol = Some("ts"), horizon = "1 hour")
-        .toDF("doc_id")
-      val sink = s"stream_minhash_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val prevCheck = s.conf
-        .get("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // chained watermarked stateful stages trip Spark's global-watermark
-      // heuristic; sound here — see StreamingMinhashDedup's scaladoc
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = kept.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          // 2 replay chunks (not 4): the contract needs cross-batch state,
-          // a mid-stream watermark advance, and timer eviction — all
-          // present at 2 batches — while every extra micro-batch costs a
-          // fixed pass through FOUR chained stateful stages; this fixture
-          // is the correctness gate, StreamBench owns the throughput signal
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prevCheck)
+    // 2 replay parts (not 4): the contract needs cross-batch state, a
+    // mid-stream watermark advance, and timer eviction — all present at 2
+    // triggers — while every extra trigger costs a fixed pass through FOUR
+    // chained stateful stages
+    (s, d) => withMinhashChain(s) {
+      Replay(s, Replay.parts(docIdsAndText(s, d), 2, "doc_id"), "stream_minhash") { docs =>
+        // +1s: the initial watermark is epoch 0, and a row AT the watermark
+        // is already late (same convention as q_dedup_stream_first_seen)
+        // spread the replay across cores BEFORE the signature projection: a
+        // MemoryStream block is ONE partition, which would run the whole
+        // 128-hash MinHash family single-threaded (a real source's scan
+        // splits provide this parallelism for free)
+        val stream = docs.repartition(16)
+          .withColumn("ts", timestamp_micros(col("doc_id") + 1000000L))
+        graft.streaming.StreamingMinhashDedup
+          .firstSeen(s, stream, "doc_id", "text", n = 3, minJ = 0.8,
+            tsCol = Some("ts"), horizon = "1 hour")
+          .toDF("doc_id")
       }
-      s.table(sink)
     },
     Some(s"""WITH w0 AS (SELECT doc_id, $wordsSql AS w FROM documents),
       | sh AS (SELECT doc_id, $shinglesSql AS s FROM w0),
@@ -218,9 +182,7 @@ object CorpusQueries {
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_minhash_${Integer.toHexString(d.hashCode)}").getAbsolutePath
       graft.streaming.FileReplay.stageOrdered(
-        Tables.documents(s, d)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text")),
-        dir, "doc_id", 32)
+        docIdsAndText(s, d), dir, "doc_id", 32)
       val stream = s.readStream
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "16")
@@ -230,26 +192,7 @@ object CorpusQueries {
         .firstSeen(s, stream, "doc_id", "text", n = 3, minJ = 0.8,
           tsCol = Some("ts"), horizon = "1 hour")
         .toDF("doc_id")
-      val sink = s"stream_minhash_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val prevCheck = s.conf
-        .get("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-      // 16 (not the MemoryStream fixtures' 4): this variant exists to
-      // measure OPERATOR state at scale, and the four chained stateful
-      // stages parallelize by state partition — results are partition-
-      // count-invariant (key-hash routing), only the wall clock moves
-      s.conf.set("spark.sql.shuffle.partitions", "16")
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = kept.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prevCheck)
-      }
-      s.table(sink)
+      withMinhashChain(s)(Replay.drain(s, kept, "stream_minhash_files", "append"))
     },
     qDedupStreamMinhash.oracle)
 
@@ -536,32 +479,12 @@ object CorpusQueries {
     */
   val qDedupStreamEmbed = Fixture(
     "q_dedup_stream_embed",
-    (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Tables.embeddings(s, d)
-        .select(col("label").cast("long"), col("vec_id").cast("long"),
-          col("embedding"))
-        .as[(Long, Long, Array[Float])].collect().sortBy(_._2)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Array[Float])]
-      val out = graft.streaming.StreamingEmbedDedup
-        .firstSeen(ms.toDF().toDF("cell", "vec_id", "vec"), 0.4)
+    (s, d) => Replay(s, Replay.parts(Tables.embeddings(s, d)
+        .select(col("label").cast("long").as("cell"),
+          col("vec_id").cast("long").as("vec_id"), col("embedding").as("vec")),
+        4, "vec_id"), "stream_embed_dedup") { stream =>
+      graft.streaming.StreamingEmbedDedup.firstSeen(stream, 0.4)
         .select(col("vec_id"), col("cell").as("label"))
-      val sink = s"stream_embed_dedup_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH e AS (SELECT vec_id, label,
       |     list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
@@ -864,8 +787,6 @@ object CorpusQueries {
   val qStreamIvfIngest = Fixture(
     "q_stream_ivf_ingest",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
       val emb = Tables.embeddings(s, d)
@@ -875,21 +796,15 @@ object CorpusQueries {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_ivf_ing/$h/$run"
       Ann.ivfWriteIndexIngestable(emb.where(col("vec_id") % 2 === 0), cents,
         tbl, s"$dir/idx", 8)
-      val rows = emb.where(col("vec_id") % 2 === 1)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val q = graft.streaming.StreamingIndexIngest.startIvf(
-        ms.toDF().toDF("vec_id", "embedding"), cents, tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.parts(emb.where(col("vec_id") % 2 === 1)
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding")), 2, "vec_id")
+      Replay.start(s, chunks) {
+        graft.streaming.StreamingIndexIngest.startIvf(_, cents, tbl, s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: same batchId, same rows —
       // the partition overwrite must leave the index bit-identical
       graft.streaming.StreamingIndexIngest.applyIvfBatch(
-        chunks.last.toSeq.toDF("vec_id", "embedding"), cents, tbl,
-        chunks.length - 1L)
+        chunks.lastTrigger(s), cents, tbl, chunks.triggers.length - 1L)
       Ann.ivfSearchPersisted(s, tbl, cents,
           emb.where(col("vec_id") < 30)
             .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
@@ -1082,8 +997,6 @@ object CorpusQueries {
   val qStreamIvfPqIngest = Fixture(
     "q_stream_ivf_pq_ingest",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
       val emb = Tables.embeddings(s, d)
@@ -1094,20 +1007,14 @@ object CorpusQueries {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_ing/$h/$run"
       Ann.ivfPqWriteIndexIngestable(emb.where(col("vec_id") % 2 === 0),
         cents, model, tbl, s"$dir/idx", 8)
-      val rows = emb.where(col("vec_id") % 2 === 1)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val q = graft.streaming.StreamingIndexIngest.startIvfPq(
-        ms.toDF().toDF("vec_id", "embedding"), cents, model, tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.parts(emb.where(col("vec_id") % 2 === 1)
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding")), 2, "vec_id")
+      Replay.start(s, chunks) {
+        graft.streaming.StreamingIndexIngest.startIvfPq(_, cents, model, tbl, s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: partition overwrite, exact
       graft.streaming.StreamingIndexIngest.applyIvfPqBatch(
-        chunks.last.toSeq.toDF("vec_id", "embedding"), cents, model, tbl,
-        chunks.length - 1L)
+        chunks.lastTrigger(s), cents, model, tbl, chunks.triggers.length - 1L)
       Ann.ivfPqSearchPersisted(s, tbl, cents, model,
         emb.where(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
@@ -1129,8 +1036,6 @@ object CorpusQueries {
   val qStreamAnnPqProbe = Fixture(
     "q_stream_ann_pq_probe",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val emb = Tables.embeddings(s, d)
       val cents = emb.where(col("vec_id") < 8)
@@ -1141,33 +1046,17 @@ object CorpusQueries {
         Ann.ivfPqWriteIndex(emb, cents, model, tbl,
           s"${sys.props("java.io.tmpdir")}/graft_ivfpq_stream/$h", 8)
       }
-      val rows = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val qdf = ms.toDF().toDF("query_id", "qv")
-        .withColumn("ts", timestamp_seconds(col("query_id") * 7))
-      val out = Ann.ivfPqSearchStreamCandidates(s, tbl, cents, model, qdf, 2)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
-        .agg(max(struct(col("score"), (-col("neighbor_id")).as("nn"))).as("b"))
-        .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
-          (-col("b.nn")).as("neighbor_id"), col("b.score").as("score"))
-      val sink = s"stream_annpq_$h${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      val queries = emb.where(col("vec_id") < 10)
+        .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("qv"))
+      Replay(s, Replay.parts(queries, 2, "query_id"), s"stream_annpq_$h") { q =>
+        val qdf = q.withColumn("ts", timestamp_seconds(col("query_id") * 7))
+        Ann.ivfPqSearchStreamCandidates(s, tbl, cents, model, qdf, 2)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
+          .agg(max(struct(col("score"), (-col("neighbor_id")).as("nn"))).as("b"))
+          .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
+            (-col("b.nn")).as("neighbor_id"), col("b.score").as("score"))
+      }
     },
     qAnnIvfPq.oracle.map { o =>
       val tail = "SELECT query_id, neighbor_id, score, rank FROM rk WHERE rank <= 5"

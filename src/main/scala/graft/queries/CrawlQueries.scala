@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.Replay
 import OracleSql._
 
 /** Sequence packing, k-means, TF-IDF/LM scoring, the crawl tier (WARC,
@@ -566,13 +567,10 @@ object CrawlQueries {
     */
   val qStreamFrontier = Fixture(
     "q_stream_frontier",
-    (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Tables.documents(s, d)
-        .select(col("doc_id").cast("long")).as[Long].collect().sorted
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val stream = ms.toDF().toDF("doc_id")
+    (s, d) => Replay(s, Replay.parts(Tables.documents(s, d)
+        .select(col("doc_id").cast("long").as("doc_id")), 4, "doc_id"),
+        "stream_frontier") { ids =>
+      val stream = ids
         .withColumn("domain", concat(lit("site"),
           (col("doc_id") % 40).cast("string"),
           when(col("doc_id") % 4 === 0, lit(".co.uk")).otherwise(lit(".com"))))
@@ -582,23 +580,9 @@ object CrawlQueries {
         // EMITTING_ROWS_OLDER_THAN_WATERMARK on the chained stage
         .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
         .withWatermark("ts", "0 seconds")
-      val sched = graft.streaming.StreamingFrontier
+      graft.streaming.StreamingFrontier
         .schedule(stream, "doc_id", "domain", "ts")
         .select(col("id").as("doc_id"), col("domain"), col("fetch_round"))
-      val sink = s"stream_frontier_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = sched.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     qFrontierSchedule.oracle)
 
@@ -935,33 +919,14 @@ object CrawlQueries {
   val qStreamHeavyHitters = Fixture(
     "q_stream_heavy_hitters",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.eventsWithEpoch(s, d)
-        .select(col("event_type"),
-          floor(sqrt(col("user_id") % 150)).cast("long").cast("string").as("bk"),
-          col("es"), col("event_id"))
-        .as[(String, String, Long, Long)].collect().sortBy(r => (r._3, r._4))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Long, Long)]
-      val stream = ms.toDF().toDF("event_type", "bk", "es", "event_id")
-      val out = graft.streaming.StreamingHeavyHitters
-        .heavyHitters(stream, "event_type", "bk", 16)
-      val sink = s"stream_hh_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = Replay(s, Replay.parts(Tables.eventsWithEpoch(s, d)
+          .select(col("event_type"),
+            floor(sqrt(col("user_id") % 150)).cast("long").cast("string").as("bk"),
+            col("es"), col("event_id")), 4, "es", "event_id"), "stream_hh") {
+        graft.streaming.StreamingHeavyHitters.heavyHitters(_, "event_type", "bk", 16)
+      }
       val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-      s.table(sink)
+      out
         .withColumn("__mx", max("seq").over(w))
         .where(col("seq") === col("__mx"))
         .select(col("grp").as("event_type"), col("term").as("bk"), col("est"))
@@ -984,36 +949,19 @@ object CrawlQueries {
   val qStreamDrift = Fixture(
     "q_stream_drift",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val emb = Tables.embeddings(s, d)
       val cents = emb.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val rows = emb.select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val out = Ann.assignCentroids(ms.toDF().toDF("vec_id", "embedding"), cents)
-        .withColumn("ts", timestamp_seconds(col("vec_id")))
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("centroid_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("centroid_id"), col("n"))
-      val sink = s"stream_drift_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay(s, Replay.parts(emb.select(col("vec_id").cast("long").as("vec_id"),
+          col("embedding")), 2, "vec_id"), "stream_drift") { vecs =>
+        Ann.assignCentroids(vecs, cents)
+          .withColumn("ts", timestamp_seconds(col("vec_id")))
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("centroid_id"))
+          .agg(count(lit(1)).as("n"))
+          .select(unix_timestamp(col("window.start")).as("ws"),
+            col("centroid_id"), col("n"))
+      }
     },
     Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
       |        FROM embeddings),
@@ -1150,16 +1098,7 @@ object CrawlQueries {
         .agg(count(lit(1)).as("n_events"),
           sum(when(col("_corrupt_record").isNull,
             floor(col("value") * lit(1e4) + lit(0.5)))).cast("long").as("sum_v4"))
-      val sink = s"stream_jsonl_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.drain(s, out, "stream_jsonl", "complete")
     },
     Some("""SELECT event_type, count(*) AS n_events,
       |   sum(floor(value * 10000 + 0.5))::BIGINT AS sum_v4
@@ -1383,49 +1322,26 @@ object CrawlQueries {
     */
   val qStreamCuration = Fixture(
     "q_stream_curation",
-    (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("text"), col("source"))
-        .as[(Long, String, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, String)]
+    // 2 parts: the replay is doc_id-sorted, so first-seen keeps the
+    // min-doc_id copy under ANY chunking (first arrival = smallest id;
+    // within-batch ties go to minBy(doc_id)) — cross-batch state carry is
+    // exercised at 2 triggers, extra triggers are overhead
+    (s, d) => Replay(s, Replay.parts(Tables.documents(s, d)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source")),
+        2, "doc_id").flushed, "stream_curation") { docs =>
       // spread the replay across cores BEFORE the regex-heavy quality
-      // scoring: a MemoryStream addData block is ONE partition (a real
-      // source's scan splits provide this parallelism for free)
-      val stream = ms.toDF().repartition(16).toDF("doc_id", "text", "source")
+      // scoring: a MemoryStream block is ONE partition (a real source's
+      // scan splits provide this parallelism for free)
+      val stream = docs.repartition(16)
         .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
         .where(Quant.q4(TextFunctions.qualityScore(col("text"))) >= 0.5)
         .withWatermark("ts", "0 seconds")
-      val out = graft.streaming.StreamingFirstSeen
+      graft.streaming.StreamingFirstSeen
         .firstSeen(stream, "text", "ts")
         .groupBy(window(col("ts"), "60 seconds"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
         .withColumn("ws", col("window.start").cast("long"))
         .select("ws", "source", "n_docs", "n_tok")
-      val sink = s"stream_curation_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          // 2 chunks: the replay is doc_id-sorted, so first-seen keeps the
-          // min-doc_id copy under ANY chunking (first arrival = smallest
-          // id; within-batch ties go to minBy(doc_id)) — cross-batch state
-          // carry is exercised at 2 batches, extra triggers are overhead
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          // one more batch so the final chunk's watermark gets APPLIED
-          // (watermark updates lag one micro-batch)
-          ms.addData(Seq(rows.last))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH t AS (SELECT doc_id, source, text,
       |   len($wordsSql)::DOUBLE AS n_tok, length(text)::DOUBLE AS n_chars,
@@ -1450,8 +1366,8 @@ object CrawlQueries {
     * [[qDedupStreamMinhashFiles]]: the regex-heavy quality scoring gets a
     * scan split per staged file instead of the driver's single-threaded
     * MemoryStream feed. The staged tail file (a duplicate of the max-id
-    * row, listed last by mtime) is the file-source spelling of the
-    * trailing addData: one extra micro-batch so the final data batch's
+    * row, listed last by mtime) is the file-source spelling of
+    * `Replay.Chunks.flushed`: one extra micro-batch so the final data batch's
     * watermark is APPLIED and its windows emit. Oracle unchanged.
     */
   val qStreamCurationFiles = Fixture(
@@ -1476,16 +1392,7 @@ object CrawlQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
         .withColumn("ws", col("window.start").cast("long"))
         .select("ws", "source", "n_docs", "n_tok")
-      val sink = s"stream_curation_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "16") // see minhash-files note
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.drain(s, out, "stream_curation_files", "append")
     },
     qStreamCuration.oracle)
 
@@ -1562,16 +1469,7 @@ object CrawlQueries {
           sum(when(col("source").isNull, 1L).otherwise(0L)).as("n_legacy"),
           count(col("source")).as("n_evolved"),
           sum("n_chars").as("sum_chars"))
-      val sink = s"stream_schevo_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.drain(s, out, "stream_schevo", "complete")
     },
     qSchemaEvolution.oracle)
 
@@ -2291,32 +2189,22 @@ object CrawlQueries {
   val qStreamCdcUpsert = Fixture(
     "q_stream_cdc_upsert",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_cdclake_${System.nanoTime}").getAbsolutePath
       val docs = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("source"), col("n_chars"))
+        .select(col("doc_id").cast("long").as("doc_id"), col("source"), col("n_chars"))
       graft.sources.SnapshotLake.commit(
         docs.withColumn("ver", lit(0L)), root, 0L)
-      def rows(df: DataFrame) =
-        df.as[(Long, String, Long, Long)].collect().toSeq
-      val b1 = rows(docs.where(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 1000L).withColumn("ver", lit(1L)))
-      val b2 = rows(docs.where(col("doc_id") % 20 === 0)
-        .withColumn("n_chars", col("n_chars") + 2000L).withColumn("ver", lit(2L))
-        .unionByName(docs.where(col("doc_id") % 7 === 3)
-          .withColumn("doc_id", col("doc_id") + 1000000L)
-          .withColumn("ver", lit(1L))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingUpsert.start(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "ver"),
-        root, "doc_id", "ver", s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          docs.where(col("doc_id") % 10 === 0)
+            .withColumn("n_chars", col("n_chars") + 1000L).withColumn("ver", lit(1L)),
+          docs.where(col("doc_id") % 20 === 0)
+            .withColumn("n_chars", col("n_chars") + 2000L).withColumn("ver", lit(2L))
+            .unionByName(docs.where(col("doc_id") % 7 === 3)
+              .withColumn("doc_id", col("doc_id") + 1000000L)
+              .withColumn("ver", lit(1L))))) {
+        graft.streaming.StreamingUpsert.start(_, root, "doc_id", "ver", s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"),
@@ -2427,18 +2315,14 @@ object CrawlQueries {
   val qStreamLakeMor = Fixture(
     "q_stream_lake_mor",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_morstream_${System.nanoTime}").getAbsolutePath
       val docs = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("source"),
-          col("n_chars").cast("long"))
+        .select(col("doc_id").cast("long").as("doc_id"), col("source"),
+          col("n_chars").cast("long").as("n_chars"))
       SnapshotLake.commitMorBase(docs, root, 0L, buckets = 8, key = "doc_id")
-      def rows(df: DataFrame) =
-        df.as[(Long, String, Long, String, Long)].collect().toSeq
-      val b1 = rows(docs.where(col("doc_id") % 10 === 0 &&
+      val b1 = docs.where(col("doc_id") % 10 === 0 &&
           col("doc_id") % 13 =!= 5)
         .select(col("doc_id"), col("source"),
           (col("n_chars") + 1000L).as("n_chars"), lit("U").as("op"),
@@ -2449,8 +2333,8 @@ object CrawlQueries {
             lit(1L).as("ver")))
         .unionByName(docs.where(col("doc_id") % 13 === 5)
           .select(col("doc_id"), col("source"), col("n_chars"),
-            lit("D").as("op"), lit(1L).as("ver"))))
-      val b2 = rows(docs.where(col("doc_id") % 20 === 0 &&
+            lit("D").as("op"), lit(1L).as("ver")))
+      val b2 = docs.where(col("doc_id") % 20 === 0 &&
           col("doc_id") % 13 =!= 5)
         .select(col("doc_id"), col("source"),
           (col("n_chars") + 2000L).as("n_chars"), lit("U").as("op"),
@@ -2458,20 +2342,13 @@ object CrawlQueries {
         .unionByName(docs.where(col("doc_id") % 11 === 4 &&
             col("doc_id") % 13 =!= 5 && col("doc_id") % 20 =!= 0)
           .select(col("doc_id"), col("source"), col("n_chars"),
-            lit("D").as("op"), lit(2L).as("ver"))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, String, Long)]
+            lit("D").as("op"), lit(2L).as("ver")))
       val ckpt = s"${root}_ckpt"
-      val q = graft.streaming.StreamingUpsert.startMor(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "op", "ver"),
-        root, "doc_id", "ver", ckpt)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(b1, b2)) {
+        graft.streaming.StreamingUpsert.startMor(_, root, "doc_id", "ver", ckpt)
+      }
       // crash-replay of the last batch: the per-writer watermark must SKIP
-      val replayed = graft.streaming.StreamingUpsert.applyBatchMor(
-        b2.toDF("doc_id", "source", "n_chars", "op", "ver"),
+      val replayed = graft.streaming.StreamingUpsert.applyBatchMor(b2,
         root, "doc_id", "ver", ckpt, 1L)
       require(!replayed, "a replayed MoR batch must SKIP, not double-commit")
       require(SnapshotLake.currentVersion(root).contains(2L),

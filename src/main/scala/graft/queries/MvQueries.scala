@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.Replay
 import OracleSql._
 import SketchQueries.{ivmDelta, ivmFinSql, ivmIns, qIvmKmvDistinct}
 
@@ -372,8 +373,6 @@ object MvQueries {
   val qStreamMvServe = Fixture(
     "q_stream_mv_serve",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -387,19 +386,11 @@ object MvQueries {
       MvRegistry.register(s, name, s"$d/documents.parquet", Seq("lang"),
         Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("n_chars"))),
         root)
-      def rows(df: DataFrame) =
-        df.as[(String, String, Option[Long], Option[Long])].collect().toSeq
-      val b1 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 0)))
-      val b2 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Option[Long], Option[Long])]
-      val q = graft.streaming.StreamingIvm.start(
-        ms.toDF().toDF("lang", "op", "old_v", "new_v"),
-        root, Seq("lang"), s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          ivmDelta(docs.where(col("doc_id") % 2 === 0)),
+          ivmDelta(docs.where(col("doc_id") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.start(_, root, Seq("lang"), s"${root}_ckpt")
+      }
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -504,8 +495,6 @@ object MvQueries {
   val qStreamMvJoinServe = Fixture(
     "q_stream_mv_join_serve",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -524,19 +513,12 @@ object MvQueries {
         Seq("o_orderpriority"),
         Seq(AggDef("cnt", "count", None),
           AggDef("sum_v", "sum", Some("l_quantity"))), root)
-      def rows(df: DataFrame) =
-        df.as[(Long, String, Option[Double], Option[Double])].collect().toSeq
-      val b1 = rows(liDelta(li.where(col("l_orderkey") % 2 === 0)))
-      val b2 = rows(liDelta(li.where(col("l_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[Double], Option[Double])]
-      val q = graft.streaming.StreamingIvm.startJoin(
-        ms.toDF().toDF("l_orderkey", "op", "old_v", "new_v"),
-        root, dims, Seq("o_orderpriority"), s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          liDelta(li.where(col("l_orderkey") % 2 === 0)),
+          liDelta(li.where(col("l_orderkey") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startJoin(_, root, dims,
+          Seq("o_orderpriority"), s"${root}_ckpt")
+      }
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -628,8 +610,6 @@ object MvQueries {
   val qStreamIvmDimDelta = Fixture(
     "q_stream_ivm_dim_delta",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val li = Tables.lineitem(s, d)
       val ords = Tables.orders(s, d)
       val root = new java.io.File(sys.props("java.io.tmpdir"),
@@ -651,22 +631,14 @@ object MvQueries {
           .select(col("o_orderkey"), lit("I").as("op"),
             lit(null).cast("string").as("old_o_orderpriority"),
             col("o_orderpriority").as("new_o_orderpriority")))
-      def rows(df: DataFrame) = df
-        .as[(Long, String, Option[String], Option[String])].collect().toSeq
-      val b1 = rows(deltaOf(ords.where(col("o_orderkey") % 2 === 0)))
-      val b2 = rows(deltaOf(ords.where(col("o_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[String], Option[String])]
-      val q = graft.streaming.StreamingIvm.startDimDelta(
-        ms.toDF().toDF("o_orderkey", "op", "old_o_orderpriority",
-          "new_o_orderpriority"),
-        root, li.select("l_orderkey", "l_quantity"), "l_orderkey",
-        "o_orderkey", Seq("o_orderpriority"), "l_quantity",
-        s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          deltaOf(ords.where(col("o_orderkey") % 2 === 0)),
+          deltaOf(ords.where(col("o_orderkey") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startDimDelta(_,
+          root, li.select("l_orderkey", "l_quantity"), "l_orderkey",
+          "o_orderkey", Seq("o_orderpriority"), "l_quantity",
+          s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select(col("o_orderpriority"), col("cnt"),
           Quant.q4(col("sum_v")).as("sum_v"))
@@ -944,8 +916,6 @@ object MvQueries {
   val qStreamIvmJoinMinmax = Fixture(
     "q_stream_ivm_join_minmax",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val li = Tables.lineitem(s, d)
       val dims = Seq(Tables.orders(s, d) ->
@@ -993,10 +963,9 @@ object MvQueries {
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir)
       val ckpt = s"$base/cp"
-      val q = graft.streaming.StreamingIvm.startJoinFull(
+      Replay.drain(s)(graft.streaming.StreamingIvm.startJoinFull(
         stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
-        "l_quantity", ckpt)
-      try q.processAllAvailable() finally q.stop()
+        "l_quantity", ckpt))
       // TORN trigger 2: the fact half lands (simulated crash after the
       // row-store commit), then the whole fold re-delivers with the same
       // batchId — fact skips on the watermark, view folds post-batch
@@ -1030,8 +999,6 @@ object MvQueries {
   val qStreamMvJoinMinmaxServe = Fixture(
     "q_stream_mv_join_minmax_serve",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -1080,10 +1047,9 @@ object MvQueries {
           "old_v DOUBLE, new_v DOUBLE")
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir)
-      val q = graft.streaming.StreamingIvm.startJoinFull(
+      Replay.drain(s)(graft.streaming.StreamingIvm.startJoinFull(
         stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
-        "l_quantity", s"$base/cp")
-      try q.processAllAvailable() finally q.stop()
+        "l_quantity", s"$base/cp"))
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -1125,8 +1091,6 @@ object MvQueries {
   val qStreamIvmSnowflake = Fixture(
     "q_stream_ivm_snowflake",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val li = Tables.lineitem(s, d)
       val ords = Tables.orders(s, d).select("o_orderkey", "o_custkey")
@@ -1151,26 +1115,17 @@ object MvQueries {
           .select(col("c_custkey"), lit("I").as("op"),
             lit(null).cast("string").as("old_c_mktsegment"),
             col("c_mktsegment").as("new_c_mktsegment")))
-      def rows(df: DataFrame) = df
-        .as[(Long, String, Option[String], Option[String])].collect().toSeq
-      val b1 = rows(deltaOf(cust.where(col("c_custkey") % 2 === 0)))
-      val b2 = rows(deltaOf(cust.where(col("c_custkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[String], Option[String])]
+      val b2 = deltaOf(cust.where(col("c_custkey") % 2 === 1))
       val ckpt = s"${root}_ckpt"
-      val q = graft.streaming.StreamingIvm.startSnowflakeDimDelta(
-        ms.toDF().toDF("c_custkey", "op", "old_c_mktsegment",
-          "new_c_mktsegment"),
-        root, li.select("l_orderkey", "l_quantity"), mids, "o_custkey",
-        "c_custkey", Seq("c_mktsegment"), "l_quantity", ckpt)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          deltaOf(cust.where(col("c_custkey") % 2 === 0)), b2)) {
+        graft.streaming.StreamingIvm.startSnowflakeDimDelta(_,
+          root, li.select("l_orderkey", "l_quantity"), mids, "o_custkey",
+          "c_custkey", Seq("c_mktsegment"), "l_quantity", ckpt)
+      }
       // crash-replay of the last batch: same writer, same batchId — the
       // fold is not idempotent, so the watermark skip is load-bearing
-      val replayed = graft.streaming.StreamingIvm.applyBatchSnowflake(
-        b2.toDF("c_custkey", "op", "old_c_mktsegment", "new_c_mktsegment"),
+      val replayed = graft.streaming.StreamingIvm.applyBatchSnowflake(b2,
         root, li.select("l_orderkey", "l_quantity"), mids, "o_custkey",
         "c_custkey", Seq("c_mktsegment"), "l_quantity", ckpt, 1L)
       require(!replayed, "a replayed batch must SKIP, not double-fold")
@@ -1674,8 +1629,6 @@ object MvQueries {
   val qStreamIvmQuantile = Fixture(
     "q_stream_ivm_quantile",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val k = 64
       val li = Tables.lineitem(s, d)
@@ -1688,19 +1641,12 @@ object MvQueries {
         .select(col("l_returnflag"), lit("I").as("op"),
           concat(liRowId, lit("_x")).as("new_id"),
           (col("l_quantity") + 7d).as("new_v"))
-      def rows(df: DataFrame) =
-        df.as[(String, String, String, Double)].collect().toSeq
-      val b1 = rows(deltaOf(li.where(col("l_orderkey") % 2 === 0)))
-      val b2 = rows(deltaOf(li.where(col("l_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, String, Double)]
-      val q = graft.streaming.StreamingIvm.startQuantile(
-        ms.toDF().toDF("l_returnflag", "op", "new_id", "new_v"),
-        root, Seq("l_returnflag"), k, s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          deltaOf(li.where(col("l_orderkey") % 2 === 0)),
+          deltaOf(li.where(col("l_orderkey") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startQuantile(_,
+          root, Seq("l_returnflag"), k, s"${root}_ckpt")
+      }
       require(SnapshotLake.currentVersion(root).contains(2L),
         s"two triggers must commit v1, v2: ${SnapshotLake.currentVersion(root)}")
       qskServe(SnapshotLake.read(s, root))
@@ -1974,35 +1920,26 @@ object MvQueries {
   val qStreamLakeZonemap = Fixture(
     "q_stream_lake_zonemap",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.{SnapshotLake, ZoneMap}
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_zmcdc_${System.nanoTime}").getAbsolutePath
       val docs = Tables.documents(s, d)
-        .select(col("doc_id").cast("long"), col("source"), col("n_chars"))
+        .select(col("doc_id").cast("long").as("doc_id"), col("source"), col("n_chars"))
       SnapshotLake.commitWithStats(docs.withColumn("ver", lit(0L)), root, 0L,
         Seq("doc_id"), sortWithinFiles = Some("doc_id"), numFiles = 8)
-      def rows(df: DataFrame) =
-        df.as[(Long, String, Long, Long)].collect().toSeq
-      val b1 = rows(docs.where(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 1000L)
-        .withColumn("ver", lit(1L)))
-      val b2 = rows(docs.where(col("doc_id") % 20 === 0)
-        .withColumn("n_chars", col("n_chars") + 2000L).withColumn("ver", lit(2L))
-        .unionByName(docs.where(col("doc_id") % 7 === 3)
-          .withColumn("doc_id", col("doc_id") + 1000000L)
-          .withColumn("ver", lit(1L))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingUpsert.startWithStats(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "ver"),
-        root, "doc_id", "ver", s"${root}_ckpt", Seq("doc_id"),
-        sortWithinFiles = Some("doc_id"), numFiles = 8)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          docs.where(col("doc_id") % 10 === 0)
+            .withColumn("n_chars", col("n_chars") + 1000L)
+            .withColumn("ver", lit(1L)),
+          docs.where(col("doc_id") % 20 === 0)
+            .withColumn("n_chars", col("n_chars") + 2000L).withColumn("ver", lit(2L))
+            .unionByName(docs.where(col("doc_id") % 7 === 3)
+              .withColumn("doc_id", col("doc_id") + 1000000L)
+              .withColumn("ver", lit(1L))))) {
+        graft.streaming.StreamingUpsert.startWithStats(_,
+          root, "doc_id", "ver", s"${root}_ckpt", Seq("doc_id"),
+          sortWithinFiles = Some("doc_id"), numFiles = 8)
+      }
       require(SnapshotLake.currentVersion(root).contains(2L),
         s"two triggers must commit v1, v2: ${SnapshotLake.currentVersion(root)}")
       val vp = SnapshotLake.versionPath(root, 2L)
@@ -2030,6 +1967,23 @@ object MvQueries {
       | FROM fin WHERE doc_id BETWEEN 100 AND 199
       | GROUP BY 1""".stripMargin))
 
+  /** The `events` columns of the funnel and pattern stream fixtures
+    * (`user_id` as a long key), filtered to `steps`: 2 event-time parts
+    * and the final-watermark resend.
+    */
+  private def stepEvents(s: SparkSession, d: String, steps: Column): Replay.Chunks =
+    Replay.parts(nfaInput(s, d).where(steps), 2, "ts").flushed
+
+  /** Every event, 2 event-time parts: the NFA fixtures keep breakers in
+    * state and emit on their timers, so no resend is needed.
+    */
+  private def nfaEvents(s: SparkSession, d: String): Replay.Chunks =
+    Replay.parts(nfaInput(s, d), 2, "ts")
+
+  private def nfaInput(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).select(col("ts"), col("user_id").cast("long").as("user_id"),
+      col("event_type"), col("value"))
+
   /** Streaming twin of [[qFunnelSteps]]
     * ([[graft.streaming.StreamingFunnel.userDepth]]): the per-DAY
     * view → click → purchase funnel computed live — watermarked tumbling
@@ -2043,37 +1997,16 @@ object MvQueries {
   val qStreamFunnel = Fixture(
     "q_stream_funnel",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val stepNames = Seq("view", "click", "purchase")
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id").cast("long"),
-          col("event_type"))
-        .as[(Long, Long, String)].collect().sortBy(_._1)
-      val lastStep = rows.reverse.find(r => stepNames.contains(r._3)).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"funnel_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.StreamingFunnel.userDepth(stream, "ts",
-            "user_id", "event_type", stepNames, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq); q.processAllAvailable()
-          }
-          // the final watermark only advances on a STEP event (the type
-          // filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // only STEP events advance event time (the type filter sits below
+      // the watermark), so only they are replayed
+      val out = Replay(s, stepEvents(s, d, col("event_type").isin(stepNames: _*)),
+          "funnel") {
+        graft.streaming.StreamingFunnel.userDepth(_, "ts",
+          "user_id", "event_type", stepNames, 86400L)
+      }
       val names = array(stepNames.map(lit): _*)
-      s.table(sink)
+      out
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
         .agg(count(lit(1)).as("n_users"))
@@ -2125,45 +2058,14 @@ object MvQueries {
   val qStreamFunnelFinal = Fixture(
     "q_stream_funnel_final",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val stepNames = Seq("view", "click", "purchase")
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id").cast("long"),
-          col("event_type"))
-        .as[(Long, Long, String)].collect().sortBy(_._1)
-      val lastStep = rows.reverse.find(r => stepNames.contains(r._3)).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"funnel_fin_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // timers + value state = multiple column families: RocksDB only
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingFunnel.userDepthLive(stream, "ts",
-            "user_id", "event_type", stepNames, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase: transformWithState drops
-          // input at-or-below the watermark, so a chunk boundary inside
-          // an equal-timestamp run would silently lose the tail rows
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-          // the final watermark only advances on a STEP event (the type
-          // filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = Replay(s, stepEvents(s, d, col("event_type").isin(stepNames: _*)),
+          "funnel_fin") {
+        graft.streaming.StreamingFunnel.userDepthLive(_, "ts",
+          "user_id", "event_type", stepNames, 86400L)
+      }
       val names = array(stepNames.map(lit): _*)
-      s.table(sink)
+      out
         .where(col("fin"))
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
@@ -2228,45 +2130,21 @@ object MvQueries {
   val qStreamPatternMatch = Fixture(
     "q_stream_pattern_match",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.Step("signup", col("event_type") === "signup"),
         Pattern.Step("qualified_purchase",
           col("event_type") === "purchase" && col("value") > 50,
           absentBefore = Some(col("event_type") === "error")))
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id").cast("long"),
-          col("event_type"), col("value"))
-        .as[(Long, Long, String, Double)].collect().sortBy(_._1)
-      def flagged(r: (Long, Long, String, Double)) =
-        r._3 == "signup" || r._3 == "error" ||
-          (r._3 == "purchase" && r._4 > 50)
-      val lastStep = rows.reverse.find(flagged).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type", "value")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.StreamingPattern.keyMatch(stream, "ts",
-            "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq); q.processAllAvailable()
-          }
-          // the final watermark only advances on a FLAGGED event (the
-          // flag filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // only FLAGGED events advance event time (the flag filter sits
+      // below the watermark), so only they are replayed
+      val flagged = col("event_type").isin("signup", "error") ||
+        (col("event_type") === "purchase" && col("value") > 50)
+      val out = Replay(s, stepEvents(s, d, flagged), "pattern") {
+        graft.streaming.StreamingPattern.keyMatch(_, "ts", "user_id", steps, 86400L)
+      }
       val names = array(steps.map(st => lit(st.name)): _*)
-      s.table(sink)
+      out
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
         .agg(count(lit(1)).as("n_keys"))
@@ -2649,41 +2527,13 @@ object MvQueries {
   val qStreamPatternNfaAll = Fixture(
     "q_stream_pattern_nfa_all",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.RunStep("p1", col("event_type") === "purchase"),
         Pattern.RunStep("p2", col("event_type") === "purchase"))
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id").cast("long"),
-          col("event_type"))
-        .as[(Long, Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_nfa_all_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingPatternNfa.allMatches(stream,
-            "ts", "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase (transformWithState drops
-          // input at-or-below the watermark)
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay(s, nfaEvents(s, d), "pattern_nfa_all") {
+        graft.streaming.StreamingPatternNfa.allMatches(_, "ts", "user_id", steps, 86400L)
+      }
         .select(col("ws"), col("u").as("user_id"), col("match_no"),
           col("m_start"), col("m_end"))
     },
@@ -2790,8 +2640,6 @@ object MvQueries {
   val qStreamPatternNfa = Fixture(
     "q_stream_pattern_nfa",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.RunStep("engage",
@@ -2799,37 +2647,11 @@ object MvQueries {
         Pattern.RunStep("highvalue", col("value") > 60),
         Pattern.RunStep("convert",
           col("event_type") === "purchase" || col("event_type") === "signup"))
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id").cast("long"),
-          col("event_type"), col("value"))
-        .as[(Long, Long, String, Double)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type", "value")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_nfa_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingPatternNfa.firstMatch(stream,
-            "ts", "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase (transformWithState drops
-          // input at-or-below the watermark)
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       // native-typed keys: `u` comes back as the long it went in as —
       // no cast-back (r18 seam #3 closed)
-      s.table(sink)
+      Replay(s, nfaEvents(s, d), "pattern_nfa") {
+        graft.streaming.StreamingPatternNfa.firstMatch(_, "ts", "user_id", steps, 86400L)
+      }
         .select(col("ws"), col("u").as("user_id"),
           col("m_start"), col("m_end"))
     },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators._
+import graft.streaming.Replay
 import SqlGen._
 
 /** The reference's application queries (SURVEY §2/§5, FIXTURES.md §3) plus
@@ -667,38 +668,15 @@ object ReferenceQueries {
     */
   val qStreamSession = Fixture(
     "q_stream_session_window",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("user_id"), col("value"))
-        .as[(Long, Long, Double)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val stream = ms.toDF().toDF("eu", "user_id", "value")
-        .withColumn("ts", timestamp_micros(col("eu")))
-      val agg = stream.withWatermark("ts", "0 seconds")
+    (s, d) => Replay(s, Replay.parts(
+        Tables.events(s, d).select("ts", "user_id", "value"), 2, "ts").flushed,
+        "stream_session") { stream =>
+      stream.withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
         .agg(AggSpec(AggFn.Cnt, col("value"), "cnt").toColumn,
              AggSpec(AggFn.Sum, col("value"), "sum_v", Some(4)).toColumn)
         .withColumn("ss", unix_micros(col("session_window.start")))
         .select("ss", "user_id", "cnt", "sum_v")
-      val sink = s"stream_session_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some("""WITH src AS (SELECT user_id, epoch_us(ts::TIMESTAMP) AS eu, value FROM events),
       | mx AS (SELECT (max(eu) // 1000) * 1000 AS wm FROM src),
@@ -732,17 +710,10 @@ object ReferenceQueries {
     */
   val qStreamYsb = Fixture(
     "q_stream_ysb_pipeline",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, d).where(col("event_type") === "view")
-        .select(unix_micros(col("ts")), col("event_type"), col("event_id"))
-        .as[(Long, String, Long)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long)]
-      val stream = ms.toDF().toDF("eu", "event_type", "event_id")
-        .withColumn("ts", timestamp_micros(col("eu")))
-        .filter(col("event_type") === "view")
+    (s, d) => Replay(s, Replay.parts(Tables.events(s, d)
+        .where(col("event_type") === "view")
+        .select("ts", "event_type", "event_id"), 2, "ts").flushed, "stream_ysb") { views =>
+      val stream = views.filter(col("event_type") === "view")
         .select(col("ts"), expr("unix_micros(ts) div 1000000").as("es"),
           pmod(col("event_id"), lit(1000)).as("ad_id"))
       val campaigns = Tables.part(s, d).select(
@@ -751,27 +722,11 @@ object ReferenceQueries {
       val joined = Joins
         .staticBroadcast(stream, campaigns, stream("ad_id") === campaigns("ad_id"))
         .drop("ad_id")
-      val agg = graft.streaming.Streams.windowAgg(
+      graft.streaming.Streams.windowAgg(
         joined, 100, 100, Seq("campaign_id"),
         Seq(AggSpec(AggFn.Cnt, col("es"), "cnt"),
             AggSpec(AggFn.Max, col("es"), "max_ts")),
         watermark = Some("0 seconds"))
-      val sink = s"stream_ysb_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH c AS (SELECT p_partkey % 1000 AS ad_id, p_partkey % 37 AS campaign_id FROM part),
       | e AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu, event_id % 1000 AS ad_id
@@ -826,67 +781,18 @@ object ReferenceQueries {
     * decimal formatting is compared digit-for-digit. SURVEY §1.5 maps
     * LongLong → Long where values fit; this pins the wide path.
     */
-  /** Replay harness for the streaming-under-batch-oracle fixtures: `events`
-    * rows (µs epoch, event_type, value) collected, event-time-sorted, and
-    * fed to `buildAgg`'s streaming query as four micro-batches through a
-    * MemoryStream, append mode. The driver-side collect feeds the REPLAY
-    * only (test-harness pattern, same as StreamBench) — the operator under
-    * test is a real stateful streaming aggregation. After the replay one
-    * more batch re-sends a max-timestamp row: the final watermark (= max
-    * event time − delay, computed at a batch's END) is applied by the NEXT
-    * batch, and while a no-data micro-batch normally does that
-    * (spark.sql.streaming.noDataMicroBatches.enabled), the resend guarantees
-    * it independent of that conf; the row lands in the last, still-open
-    * window, which is never emitted, so it cannot perturb output. Which rows
-    * share a micro-batch affects emission timing only, never the aggregate
-    * values — the replay chunking is not load-bearing, so the replay uses
-    * TWO chunks: enough to exercise cross-batch state carry (plus the tail
-    * trigger), without paying micro-batch overhead four times per attempt
-    * (~1 s/fixture at sf0.1 across the 150-query bench). Fixtures whose
-    * CUSTOM state semantics could see batch boundaries (first-seen keeper
-    * choice, ring eviction in the θ-joins, count windows) keep 4 chunks.
+  /** The `events` columns the windowed stream fixtures read, replayed by
+    * [[graft.streaming.Replay]] in event-time order: 2 parts and the
+    * final-watermark resend.
     */
-  private def replayEvents(s: SparkSession, d: String, sinkPrefix: String)(
-      buildAgg: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val rows = Tables.events(s, d)
-      .select(unix_micros(col("ts")), col("event_type"), col("value"),
-        col("user_id").cast("long"))
-      .as[(Long, String, Double, Long)].collect().sortBy(_._1)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Double, Long)]
-    val stream = ms.toDF().toDF("tsu", "event_type", "value", "user_id")
-      .withColumn("ts", timestamp_micros(col("tsu")))
-    // unique sink name: attempts in the same session must not collide
-    val sink = s"${sinkPrefix}_${System.nanoTime}"
-    // Streaming STATE partitioning is a deployment knob fixed at first run,
-    // not a data-scaled shuffle: every stateful operator writes state/delta
-    // files per partition per micro-batch, so 32 partitions on a replay this
-    // size is pure checkpoint-I/O overhead (measured 16 s → ~5 s for the
-    // chained paned fixture at sf0.1). Size it to the replay and restore.
-    // Every replay runs in the one streaming posture, Streams.withRocksDb.
-    graft.streaming.Streams.withRocksDb(s) {
-      graft.streaming.Streams.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
-        val q = buildAgg(stream).writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark (see above)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-    }
-    s.table(sink)
-  }
+  private def eventChunks(s: SparkSession, d: String): Replay.Chunks =
+    Replay.parts(Tables.events(s, d).select(col("ts"), col("event_type"),
+      col("value"), col("user_id").cast("long").as("user_id")), 2, "ts").flushed
 
   /** The PRODUCTION streaming path — append mode + watermark — under the
     * batch oracle: tumbling 1 h windows keyed by event_type, CNT + SUM,
     * watermark delay 0, via [[graft.streaming.Streams.windowAgg]] over the
-    * [[replayEvents]] harness. Append mode emits a window exactly once, when
+    * [[eventChunks]] replay. Append mode emits a window exactly once, when
     * the watermark passes its END — so the emitted set is exactly the
     * windows with end ≤ max event time, and the oracle filters identically.
     * Complements StreamingSpec (paned/native equivalence, late-data drops):
@@ -894,7 +800,7 @@ object ReferenceQueries {
     */
   val qStreamTumbling = Fixture(
     "q_stream_tumbling_agg",
-    (s, d) => replayEvents(s, d, "stream_tumbling") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_tumbling") { stream =>
       graft.streaming.Streams.windowAgg(
         stream, 3600, 3600, Seq("event_type"),
         Seq(AggSpec(AggFn.Cnt, col("value"), "cnt"),
@@ -912,7 +818,7 @@ object ReferenceQueries {
       | HAVING (ws + 3600) * 1000000 <= (SELECT mx FROM mx)""".stripMargin))
 
   /** LightSaber's pane trick on the production streaming path, under the
-    * batch oracle: [[replayEvents]] through
+    * batch oracle: [[eventChunks]] replayed through
     * [[graft.streaming.Streams.windowAggPaned]] — per-key rings of 10-min
     * pane partials merged into sliding (1 h, 10 min) windows, append mode,
     * delay 0. A window is emitted once the watermark reaches its end, so
@@ -921,7 +827,7 @@ object ReferenceQueries {
     */
   val qStreamSlidingPaned = Fixture(
     "q_stream_sliding_paned",
-    (s, d) => replayEvents(s, d, "stream_sliding_paned") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_sliding_paned") { stream =>
       graft.streaming.Streams.windowAggPaned(
         stream, 3600, 600, Seq("event_type"),
         Seq(AggSpec(AggFn.Cnt, col("value"), "cnt"),
@@ -947,7 +853,7 @@ object ReferenceQueries {
     */
   val qStreamWeightedAvg = Fixture(
     "q_stream_weighted_avg",
-    (s, d) => replayEvents(s, d, "stream_wavg") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_wavg") { stream =>
       val e = stream.withColumn("w",
         (pmod(col("user_id"), lit(5)) + lit(1)).cast("double"))
       graft.streaming.Streams.windowAgg(
@@ -975,7 +881,7 @@ object ReferenceQueries {
     */
   val qStreamHaving = Fixture(
     "q_stream_having",
-    (s, d) => replayEvents(s, d, "stream_having") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_having") { stream =>
       graft.streaming.Streams.windowAgg(
         stream, 3600, 3600, Seq("user_id"),
         Seq(AggSpec(AggFn.Sum, col("value"), "sum_v", Some(4))),
@@ -1052,40 +958,20 @@ object ReferenceQueries {
   val qStreamGapFill = Fixture(
     "q_stream_gap_fill",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val src = Tables.events(s, d).where(col("user_id") % 199 === 0)
         .select(col("event_type"),
           graft.operators.TimeWindows.epochSeconds(col("ts")).as("es"),
-          col("value"), unix_micros(col("ts")).as("eu"))
-      val rows = src.as[(String, Long, Double, Long)].collect().sortBy(_._4)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long, Double, Long)]
-      val stream = ms.toDF().toDF("event_type", "es", "value", "eu")
-        .withColumn("ts", timestamp_micros(col("eu")))
-      val out = graft.streaming.StreamingGapFill
-        .tumblingWithBubbles(s, stream, 3600, watermarkDelaySec = 0L)
-        .select(col("event_type"), col("ws"), col("cnt"),
-          Quant.q4(col("sum_v")).as("sum_v"))
-      val sink = s"stream_gap_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          col("value"), col("ts"))
+      val out = Replay(s, Replay.parts(src, 4, "ts").flushed, "stream_gap") { stream =>
+        graft.streaming.StreamingGapFill
+          .tumblingWithBubbles(s, stream, 3600, watermarkDelaySec = 0L)
+          .select(col("event_type"), col("ws"), col("cnt"),
+            Quant.q4(col("sum_v")).as("sum_v"))
+      }
       // spine trim: per-key last DATA window, from the same batch relation
       val hi = src.groupBy("event_type")
         .agg(max(expr("(es div 3600) * 3600")).as("__hi"))
-      s.table(sink).join(broadcast(hi), "event_type")
+      out.join(broadcast(hi), "event_type")
         .where(col("ws") <= col("__hi")).drop("__hi")
     },
     Some(s"""WITH src AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu,
@@ -1114,32 +1000,12 @@ object ReferenceQueries {
     */
   val qStreamCountWindow = Fixture(
     "q_stream_count_window",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.eventsWithEpoch(s, d)
-        .select(col("user_id"), col("es"), col("event_id"), col("value"))
-        .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._2, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long, Double)]
-      val stream = ms.toDF().toDF("user_id", "es", "event_id", "value")
-      val out = graft.streaming.StreamingCountWindows.tumbling(s, stream, 10)
+    (s, d) => Replay(s, Replay.parts(Tables.eventsWithEpoch(s, d)
+        .select("user_id", "es", "event_id", "value"), 4, "es", "event_id"),
+        "stream_count") { stream =>
+      graft.streaming.StreamingCountWindows.tumbling(s, stream, 10)
         .select(col("user_id"), col("wid"), col("cnt"),
           Quant.q4(col("sum_v")).as("sum_v"))
-      val sink = s"stream_count_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH src AS (SELECT ${es("ts")} AS es, event_id, user_id, value FROM events),
       | w AS (SELECT user_id, value,
@@ -1165,41 +1031,21 @@ object ReferenceQueries {
     */
   val qStreamJoinTheta = Fixture(
     "q_stream_join_theta",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.eventsWithEpoch(s, d)
-        .select(col("es"), col("event_type"), col("event_id"), col("user_id"))
-        .as[(Long, String, Long, Long)].collect().sortBy(r => (r._1, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val src = ms.toDF().toDF("es", "event_type", "event_id", "user_id")
+    (s, d) => Replay(s, Replay.parts(Tables.eventsWithEpoch(s, d)
+        .select("es", "event_type", "event_id", "user_id"), 4, "es", "event_id"),
+        "stream_join") { src =>
       val l = src.where(col("event_type") === "click")
         .select(timestamp_seconds(col("es")).as("l_ts"),
           col("event_id").as("l_id"), col("user_id"))
       val r = src.where(col("event_type") === "purchase")
         .select(timestamp_seconds(col("es")).as("r_ts"),
           col("event_id").as("r_id"), col("user_id").as("r_user"))
-      val joined = graft.streaming.Streams.windowedThetaJoin(
+      graft.streaming.Streams.windowedThetaJoin(
           l, r, "l_ts", "r_ts", 600,
           col("user_id") === col("r_user"), "2 hours")
         .select(col("user_id"), col("l_id"), col("r_id"),
           expr("unix_micros(l_ts) div 1000000").as("l_es"),
           expr("unix_micros(r_ts) div 1000000").as("r_es"))
-      val sink = s"stream_join_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH e AS (SELECT ${es("ts")} AS es, event_id, user_id, event_type FROM events),
       | l AS (SELECT es AS l_es, event_id AS l_id, user_id FROM e WHERE event_type = 'click'),
@@ -1244,17 +1090,7 @@ object ReferenceQueries {
         .select(col("user_id"), col("l_id"), col("r_id"),
           expr("unix_micros(l_ts) div 1000000").as("l_es"),
           expr("unix_micros(r_ts) div 1000000").as("r_es"))
-      val sink = s"stream_join_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      // 16: join state partitions parallelize; results are invariant
-      s.conf.set("spark.sql.shuffle.partitions", "16")
-      try {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.drain(s, joined, "stream_join_files", "append")
     },
     qStreamJoinTheta.oracle)
 
@@ -1271,37 +1107,17 @@ object ReferenceQueries {
     */
   val qStreamJoinThetaRow = Fixture(
     "q_stream_join_theta_rowwin",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.eventsWithEpoch(s, d)
+    (s, d) => Replay(s, Replay.parts(Tables.eventsWithEpoch(s, d)
         .where(col("event_type").isin("click", "purchase"))
         .select(
           (col("es") * lit(10000000L) + col("event_id")).as("ord"),
           (col("event_type") === "click").as("left"),
-          col("user_id").as("key"), col("es").as("ts"), col("event_id").as("id"))
-        .as[(Long, Boolean, Long, Long, Long)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Boolean, Long, Long, Long)]
-      val tagged = ms.toDF().toDF("ord", "left", "key", "ts", "id")
-      val out = graft.streaming.StreamingThetaJoin
+          col("user_id").as("key"), col("es").as("ts"), col("event_id").as("id")),
+        4, "ord"), "stream_join_row") { tagged =>
+      graft.streaming.StreamingThetaJoin
         .rowWindowedTheta(s, tagged, leftRows = 400, rightRows = 300)
         .select(col("key").as("user_id"), col("l_id"), col("r_id"),
           col("l_ts").as("l_es"), col("r_ts").as("r_es"))
-      val sink = s"stream_join_row_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     qJoinThetaRow.oracle)
 
@@ -1333,7 +1149,7 @@ object ReferenceQueries {
     */
   val qStreamTopK = Fixture(
     "q_stream_topk_per_group",
-    (s, d) => replayEvents(s, d, "stream_topk") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_topk") { stream =>
       stream.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "3600 seconds"), col("event_type"))
         .agg(graft.functions.TopKAgg.topK(
@@ -1357,45 +1173,21 @@ object ReferenceQueries {
 
   val qStreamHotItems = Fixture(
     "q_stream_hot_items",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, d)
-        .select(unix_micros(col("ts")), col("event_id"))
-        .as[(Long, Long)].collect().sortBy(identity)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val stream = ms.toDF().toDF("eu", "event_id")
-        .select(timestamp_micros(col("eu")).as("ts"),
-          pmod(col("event_id"), lit(4)).as("auction"))
+    (s, d) => Replay(s, Replay.parts(Tables.events(s, d).select("ts", "event_id"),
+        2, "ts", "event_id").flushed, "stream_hot") { events =>
+      val stream = events
+        .select(col("ts"), pmod(col("event_id"), lit(4)).as("auction"))
         .withWatermark("ts", "0 seconds")
       val s1 = stream
         .groupBy(window(col("ts"), "3600 seconds").as("w0"), col("auction"))
         .agg(count(lit(1)).as("cnt"))
-      val out = s1
-        .groupBy(window(col("w0"), "3600 seconds"))
+      s1.groupBy(window(col("w0"), "3600 seconds"))
         .agg(max(col("cnt")).as("mx"),
           collect_list(struct(col("cnt"), col("auction"))).as("items"))
         .select(col("window.start").cast("long").as("ws"), col("mx"),
           explode(col("items")).as("it"))
         .where(col("it.cnt") === col("mx"))
         .select(col("ws"), col("it.auction").as("auction"), col("it.cnt").as("cnt"))
-      val sink = s"stream_hot_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
     },
     Some(s"""WITH e AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu,
       |        event_id % 4 AS auction FROM events),
@@ -1417,32 +1209,12 @@ object ReferenceQueries {
     */
   val qStreamAsOf = Fixture(
     "q_stream_asof_join",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, d)
+    (s, d) => Replay(s, Replay.parts(Tables.events(s, d)
         .where(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), unix_micros(col("ts")).as("eu"), col("event_id"),
-          when(col("event_type") === "click", 0).otherwise(1).as("side"))
-        .as[(Long, Long, Long, Int)].collect().sortBy(r => (r._2, r._4, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long, Int)]
-      val stream = ms.toDF().toDF("user_id", "eu", "event_id", "side")
-      val out = graft.streaming.StreamingAsOf.latestPrior(s, stream).toDF()
-      val sink = s"stream_asof_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+          when(col("event_type") === "click", 0).otherwise(1).as("side")),
+        4, "eu", "side", "event_id"), "stream_asof") { stream =>
+      graft.streaming.StreamingAsOf.latestPrior(s, stream).toDF()
     },
     Some("""WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts::TIMESTAMP) AS eu FROM events),
       | l AS (SELECT event_id AS l_id, user_id, eu AS l_eu FROM e WHERE event_type = 'click'),
@@ -1484,7 +1256,7 @@ object ReferenceQueries {
     */
   val qStreamKmvDistinct = Fixture(
     "q_stream_kmv_distinct",
-    (s, d) => replayEvents(s, d, "stream_kmv") { stream =>
+    (s, d) => Replay(s, eventChunks(s, d), "stream_kmv") { stream =>
       import graft.functions.{Kmv, TextFunctions}
       stream.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "3600 seconds"))
@@ -1515,9 +1287,9 @@ object ReferenceQueries {
   /** [[qStreamKmvDistinct]] replayed from a FILE source
     * (streaming/FileReplay — mtime-ordered contiguous-range staging,
     * maxFilesPerTrigger as the chunking, the re-delivered tail row
-    * applying the final watermark exactly like the MemoryStream twin's
-    * trailing addData; the duplicate lands in the never-emitted last
-    * window, so the oracle is shared verbatim). Real scan splits feed the
+    * applying the final watermark exactly like the replayed twin's resend
+    * (`Replay.Chunks.flushed`); the duplicate lands in the never-emitted
+    * last window, so the oracle is shared verbatim). Real scan splits feed the
     * sketch state in parallel, so the sf1 smoke measures the O(k)-per-
     * window aggregate, not the single-threaded driver feed.
     */
@@ -1546,16 +1318,7 @@ object ReferenceQueries {
           size(col("kmv")).cast("long").as("sketch_size"),
           Quant.q4(Kmv.estimate(col("kmv"), 16)).as("est_users"),
           col("cnt"))
-      val sink = s"stream_kmv_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "16")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.drain(s, out, "stream_kmv_files", "append")
     },
     qStreamKmvDistinct.oracle)
 

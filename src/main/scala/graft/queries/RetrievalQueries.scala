@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.Replay
 import OracleSql._
 import CorpusQueries.qDedupIndexProbe
 
@@ -187,8 +188,6 @@ object RetrievalQueries {
   val qStreamAhashIngest = Fixture(
     "q_stream_ahash_index_ingest",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
       val feats = Multimodal.pixelFeatures(s,
@@ -198,21 +197,16 @@ object RetrievalQueries {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_ah_ing/$h/$run"
       Multimodal.ahashWriteIndexIngestable(feats.where(col("doc_id") % 4 === 0),
         "doc_id", "ahash", 3, tbl, s"$dir/idx", 8)
-      val rows = feats.where(col("doc_id") % 4 === 2)
-        .select(col("doc_id").cast("long"), col("ahash").cast("long"))
-        .as[(Long, Long)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val q = graft.streaming.StreamingIndexIngest.startAhash(
-        ms.toDF().toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl,
-        s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.parts(feats.where(col("doc_id") % 4 === 2)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          col("ahash").cast("long").as("ahash")), 2, "doc_id")
+      Replay.start(s, chunks) {
+        graft.streaming.StreamingIndexIngest.startAhash(_, "doc_id", "ahash", 3, tbl,
+          s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: partition overwrite, not append
       graft.streaming.StreamingIndexIngest.applyAhashBatch(
-        chunks.last.toSeq.toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl,
-        chunks.length - 1L)
+        chunks.lastTrigger(s), "doc_id", "ahash", 3, tbl, chunks.triggers.length - 1L)
       Multimodal.ahashProbeIndex(s, feats.where(col("doc_id") % 2 === 1),
         "doc_id", "ahash", 3, tbl)
         .select(col("new_id"), col("corpus_id"), col("ham").cast("long").as("ham"))
@@ -673,8 +667,6 @@ object RetrievalQueries {
   val qStreamAnnProbe = Fixture(
     "q_stream_ann_probe",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val emb = Tables.embeddings(s, d)
       val cents = emb.where(col("vec_id") < 8)
@@ -684,33 +676,17 @@ object RetrievalQueries {
         Ann.ivfWriteIndex(emb, cents, tbl,
           s"${sys.props("java.io.tmpdir")}/graft_ivf_stream/$h", 8)
       }
-      val rows = emb.where(col("vec_id") < 30)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val qdf = ms.toDF().toDF("query_id", "qv")
-        .withColumn("ts", timestamp_seconds(col("query_id") * 7))
-      val out = Ann.ivfSearchStreamCandidates(s, tbl, cents, qdf, 2)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
-        .agg(max(struct(col("cos"), (-col("neighbor_id")).as("nn"))).as("b"))
-        .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
-          (-col("b.nn")).as("neighbor_id"), col("b.cos").as("cos"))
-      val sink = s"stream_ann_$h${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      val queries = emb.where(col("vec_id") < 30)
+        .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("qv"))
+      Replay(s, Replay.parts(queries, 2, "query_id"), s"stream_ann_$h") { q =>
+        val qdf = q.withColumn("ts", timestamp_seconds(col("query_id") * 7))
+        Ann.ivfSearchStreamCandidates(s, tbl, cents, qdf, 2)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
+          .agg(max(struct(col("cos"), (-col("neighbor_id")).as("nn"))).as("b"))
+          .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
+            (-col("b.nn")).as("neighbor_id"), col("b.cos").as("cos"))
+      }
     },
     Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
       |        FROM embeddings),
@@ -1070,8 +1046,6 @@ object RetrievalQueries {
   val qStreamBm25Ingest = Fixture(
     "q_stream_bm25_ingest",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
       val docs = Tables.documents(s, d)
@@ -1079,19 +1053,13 @@ object RetrievalQueries {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_bm25_ing/$h/$run"
       graft.similarity.Bm25.writeIndexIngestable(
         docs.where(col("doc_id") % 2 === 0), "doc_id", "text", tbl, dir, 8)
-      val rows = docs.where(col("doc_id") % 2 === 1)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIndexIngest.startBm25(
-        ms.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.parts(docs.where(col("doc_id") % 2 === 1)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")), 2, "doc_id")
+      Replay.start(s, chunks) {
+        graft.streaming.StreamingIndexIngest.startBm25(_, "doc_id", "text", tbl, s"$dir/cp")
+      }
       graft.streaming.StreamingIndexIngest.applyBm25Batch(
-        chunks.last.toSeq.toDF("doc_id", "text"), "doc_id", "text", tbl,
-        chunks.length - 1L)
+        chunks.lastTrigger(s), "doc_id", "text", tbl, chunks.triggers.length - 1L)
       graft.similarity.Bm25.searchTopK(s, tbl, Seq("table", "row", "window"), 20)
     },
     qBm25.oracle)
@@ -1115,8 +1083,6 @@ object RetrievalQueries {
   val qStreamMinhashIngest = Fixture(
     "q_stream_minhash_index_ingest",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
       val docs = Tables.documents(s, d)
@@ -1124,21 +1090,16 @@ object RetrievalQueries {
       val dir = s"${sys.props("java.io.tmpdir")}/graft_mh_ing/$h/$run"
       Dedup.minhashWriteIndexIngestable(docs.where(col("doc_id") % 4 === 0),
         "doc_id", "text", 3, tbl, s"$dir/idx", 8)
-      val rows = docs.where(col("doc_id") % 4 === 2)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIndexIngest.startMinhash(
-        ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.parts(docs.where(col("doc_id") % 4 === 2)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")), 2, "doc_id")
+      Replay.start(s, chunks) {
+        graft.streaming.StreamingIndexIngest.startMinhash(_, "doc_id", "text", 3, tbl,
+          s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: same batchId, same rows —
       // both partition overwrites must leave the index bit-identical
       graft.streaming.StreamingIndexIngest.applyMinhashBatch(
-        chunks.last.toSeq.toDF("doc_id", "text"), "doc_id", "text", 3, tbl,
-        chunks.length - 1L)
+        chunks.lastTrigger(s), "doc_id", "text", 3, tbl, chunks.triggers.length - 1L)
       Dedup.minhashProbeIndex(s, docs.where(col("doc_id") % 2 === 1),
         "doc_id", "text", 3, 0.8, tbl)
     },
@@ -1167,8 +1128,6 @@ object RetrievalQueries {
   val qStreamPipelineComposite = Fixture(
     "q_stream_pipeline_composite",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       import graft.streaming.StreamingIndexIngest
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -1204,10 +1163,8 @@ object RetrievalQueries {
           stream, "text", "ts", "1 hour")
         .where(quality)
         .select("doc_id", "text")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = curated.writeStream
+      Replay.drain(s) {
+        curated.writeStream
           .option("checkpointLocation", s"$dir/cp")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // ONE batch, TWO families: both appends key their partition
@@ -1221,9 +1178,7 @@ object RetrievalQueries {
             } finally { b.unpersist(); () }
           }
           .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       // crash-replay of the LAST batch into BOTH families: the last
       // staged file IS the last micro-batch (one file per trigger), its
       // post-pipeline rows re-derived (dedup is passthrough on this
@@ -1390,26 +1345,20 @@ object RetrievalQueries {
     * (bounded by the EVAL set, the same smallness argument as the batch
     * broadcast; at eval sets too large to inline, chain the
     * contaminationBloom expression as a prefilter and sweep exact counts
-    * in batch). No state store, no watermark, no shuffle: contamination
-    * flagging adds zero streaming machinery to the ingest path. Kept
+    * in batch). No state store, no watermark: contamination flagging adds
+    * no streaming machinery to the ingest path (the one round-robin
+    * shuffle only spreads the driver-fed replay block across cores). Kept
     * semantics and output are identical to batch [[qDecontaminate]], so
     * its oracle is reused verbatim.
     */
   lazy val qStreamDecontaminate = Fixture(
     "q_stream_decontaminate",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       val all = Tables.documents(s, d)
       val evalSet: Array[Long] = all.where(col("doc_id") < 25)
         .select(explode(TextFunctions.shingles(col("text"), 3)).as("s0"))
         .select(xxhash64(col("s0")).as("sg")).distinct()
         .collect().map(_.getLong(0)).sorted
-      val rows = all.where(col("doc_id") >= 25)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
       // membership probe = ONE codegen'd sorted-merge per row
       // (SortedIntersectSize against the sorted eval literal), not a
       // per-shingle linear array_contains over the |eval| literal — the
@@ -1419,30 +1368,24 @@ object RetrievalQueries {
       // the shingle transform runs once per row (winnow's staging rule).
       import org.apache.spark.sql.GraftColumnBridge
       val litSet = lit(evalSet) // ascending — the merge contract
-      val out = ms.toDF().toDF("doc_id", "text")
-        .withColumn("sh", TextFunctions.shingles(col("text"), 3))
-        .where(size(col("sh")) > 0)
-        .withColumn("shh", sort_array(transform(col("sh"), x => xxhash64(x))))
-        .withColumn("n_overlap", GraftColumnBridge.column(
-          graft.functions.SortedIntersectSize(
-            GraftColumnBridge.expression(col("shh")),
-            GraftColumnBridge.expression(litSet), 0.0)).cast("long"))
-        .where(col("n_overlap") > 0)
-        .select(col("doc_id"), col("n_overlap"),
-          Quant.q4(col("n_overlap") / size(col("sh"))).as("frac"))
-      val sink = s"stream_decon_${System.nanoTime}"
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        // ONE trigger (the probe is STATELESS — no state store, no
-        // watermark — so batch boundaries cannot affect any row), but MANY
-        // addData blocks: MemoryStream makes one partition per block, and
-        // the shingle+hash+merge projection is the cost — one 5 000-row
-        // block would run it on a single core while 31 idle
-        rows.grouped(math.max(1, rows.length / 64 + 1)).foreach(c => ms.addData(c.toSeq))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
+      // ONE trigger (the probe is STATELESS — no state store, no
+      // watermark — so batch boundaries cannot affect any row), spread
+      // across cores before the shingle+hash+merge projection, which is
+      // the cost: one replay block is ONE partition
+      Replay(s, Replay.parts(all.where(col("doc_id") >= 25)
+          .select("doc_id", "text"), 1, "doc_id"), "stream_decon") { docs =>
+        docs.repartition(16)
+          .withColumn("sh", TextFunctions.shingles(col("text"), 3))
+          .where(size(col("sh")) > 0)
+          .withColumn("shh", sort_array(transform(col("sh"), x => xxhash64(x))))
+          .withColumn("n_overlap", GraftColumnBridge.column(
+            graft.functions.SortedIntersectSize(
+              GraftColumnBridge.expression(col("shh")),
+              GraftColumnBridge.expression(litSet), 0.0)).cast("long"))
+          .where(col("n_overlap") > 0)
+          .select(col("doc_id"), col("n_overlap"),
+            Quant.q4(col("n_overlap") / size(col("sh"))).as("frac"))
+      }
     },
     qDecontaminate.oracle)
 

@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.Replay
 import OracleSql._
 import RetrievalQueries.qBm25
 
@@ -325,26 +326,16 @@ object SketchQueries {
   val qStreamIvmRollup = Fixture(
     "q_stream_ivm_rollup",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_ivmlake_${System.nanoTime}").getAbsolutePath
       val docs = Tables.documents(s, d)
       graft.sources.SnapshotLake.commit(
         graft.operators.Ivm.view(docs, Seq("lang"), "n_chars"), root, 0L)
-      def rows(df: DataFrame) =
-        df.as[(String, String, Option[Long], Option[Long])].collect().toSeq
-      val b1 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 0)))
-      val b2 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Option[Long], Option[Long])]
-      val q = graft.streaming.StreamingIvm.start(
-        ms.toDF().toDF("lang", "op", "old_v", "new_v"),
-        root, Seq("lang"), s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          ivmDelta(docs.where(col("doc_id") % 2 === 0)),
+          ivmDelta(docs.where(col("doc_id") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.start(_, root, Seq("lang"), s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select(col("lang"), col("cnt"), col("sum_v"))
     },
@@ -663,8 +654,6 @@ object SketchQueries {
   val qStreamIvmKmv = Fixture(
     "q_stream_ivm_kmv",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.functions.Kmv
       val k = 16
       val docs = Tables.documents(s, d)
@@ -672,21 +661,14 @@ object SketchQueries {
         s"graft_kmvlake_${System.nanoTime}").getAbsolutePath
       graft.sources.SnapshotLake.commit(
         graft.operators.Ivm.viewKmv(docs, Seq("lang"), "source", k), root, 0L)
-      def rows(df: DataFrame) = df
+      def inserts(df: DataFrame) = df
         .select(col("lang"), lit("I").as("op"),
           concat(col("source"), lit("_x")).as("new_v"))
-        .as[(String, String, String)].collect().toSeq
-      val b1 = rows(docs.where(ivmIns && col("doc_id") % 2 === 0))
-      val b2 = rows(docs.where(ivmIns && col("doc_id") % 2 === 1))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, String)]
-      val q = graft.streaming.StreamingIvm.startKmv(
-        ms.toDF().toDF("lang", "op", "new_v"),
-        root, Seq("lang"), k, s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          inserts(docs.where(ivmIns && col("doc_id") % 2 === 0)),
+          inserts(docs.where(ivmIns && col("doc_id") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startKmv(_, root, Seq("lang"), k, s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select(col("lang"),
           aggregate(col("kmv"), lit(0L), (a, x) => a.bitwiseXOR(x)).as("kmv_xor"),
@@ -767,8 +749,6 @@ object SketchQueries {
   val qStreamIvmCms = Fixture(
     "q_stream_ivm_cms",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val (depth, width) = (4, 8)
       val docs = Tables.documents(s, d)
       val root = new java.io.File(sys.props("java.io.tmpdir"),
@@ -776,19 +756,12 @@ object SketchQueries {
       graft.sources.SnapshotLake.commit(
         graft.operators.Ivm.viewCms(docs, Seq("lang"), "source", depth,
           width), root, 0L)
-      def rows(df: DataFrame) = df
-        .as[(String, String, Option[String], Option[String])].collect().toSeq
-      val b1 = rows(cmsDelta(docs.where(col("doc_id") % 2 === 0)))
-      val b2 = rows(cmsDelta(docs.where(col("doc_id") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Option[String], Option[String])]
-      val q = graft.streaming.StreamingIvm.startCms(
-        ms.toDF().toDF("lang", "op", "old_v", "new_v"),
-        root, Seq("lang"), depth, width, s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          cmsDelta(docs.where(col("doc_id") % 2 === 0)),
+          cmsDelta(docs.where(col("doc_id") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startCms(_, root, Seq("lang"), depth, width,
+          s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select(col("lang"), col("r").cast("long").as("r"), col("c"),
           col("cnt"))
@@ -857,8 +830,6 @@ object SketchQueries {
   val qStreamIvmSample = Fixture(
     "q_stream_ivm_sample",
     (s, d) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val denom = 4
       val docs = Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
@@ -867,20 +838,12 @@ object SketchQueries {
       graft.sources.SnapshotLake.commit(
         graft.operators.Ivm.viewSample(docs,
           col("doc_id").cast("string"), denom), root, 0L)
-      def rows(df: DataFrame) =
-        df.as[(Long, String, String, Long, String)].collect().toSeq
-      val b1 = rows(sampleDelta(docs.where(col("doc_id") % 2 === 0)))
-      val b2 = rows(sampleDelta(docs.where(col("doc_id") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, String, Long, String)]
-      val q = graft.streaming.StreamingIvm.startSample(
-        ms.toDF().toDF("doc_id", "lang", "source", "n_chars", "op"),
-        root, "doc_id", col("doc_id").cast("string"), denom,
-        s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.start(s, Replay.each(
+          sampleDelta(docs.where(col("doc_id") % 2 === 0)),
+          sampleDelta(docs.where(col("doc_id") % 2 === 1)))) {
+        graft.streaming.StreamingIvm.startSample(_, root, "doc_id",
+          col("doc_id").cast("string"), denom, s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select("doc_id", "lang", "source", "n_chars")
     },
@@ -907,8 +870,6 @@ object SketchQueries {
   val qStreamHybridRrf = Fixture(
     "q_stream_hybrid_rrf",
     (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       import graft.functions.TopKAgg
       val h = Integer.toHexString(d.hashCode)
       val emb = Tables.embeddings(s, d)
@@ -927,57 +888,41 @@ object SketchQueries {
       val termStats = posts.groupBy("term").agg(count(lit(1)).as("df"))
         .crossJoin(s.table(s"${bmTbl}_stats")
           .agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl")))
-      val rows = emb.where(col("vec_id") < 30)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val qdf = ms.toDF().toDF("query_id", "qv")
-        .withColumn("ts", timestamp_seconds(col("query_id") * 7))
-      val den = Ann.ivfSearchStreamCandidates(s, ivfTbl, cents,
-          qdf.select("query_id", "qv", "ts"), 2)
-        .select(col("query_id"), col("ts"), lit(1).as("tag"),
-          col("neighbor_id").as("id"), col("cos").as("score"))
-      val idf = log((col("n") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)) + lit(1.0))
-      val lex = qdf
-        .withColumn("term", element_at(array(vocab.map(lit): _*),
-          (col("query_id") % 4 + 1).cast("int")))
-        .join(posts.select("term", "doc_id", "tf", "dl"), Seq("term"))
-        .join(broadcast(termStats), Seq("term"))
-        .withColumn("avgdl", col("sdl").cast("double") / col("n"))
-        .select(col("query_id"), col("ts"), lit(0).as("tag"),
-          col("doc_id").as("id"),
-          Quant.q4(idf * (col("tf") * lit(2.2)) / (col("tf") + lit(1.2) *
-            (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))).as("score"))
-      val out = lex.unionByName(den)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
-        .agg(TopKAgg.topK(when(col("tag") === 0, col("score")), col("id"), 5)
-            .as("lex5"),
-          TopKAgg.topK(when(col("tag") === 1, col("score")), col("id"), 5)
-            .as("den5"))
-        .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
-          posexplode(graft.similarity.Fusion.rrfFuseArrays(
-            col("lex5"), col("den5"), 60, 3)))
-        .select(col("ws"), col("query_id"), (col("pos") + 1).cast("long")
-            .as("fused_rank"), col("col.id").as("id"),
-          Quant.q4(col("col.fused_score")).as("fused_score"),
-          col("col.n_lists").as("n_lists"), col("col.best_rank").as("best_rank"))
-      val sink = s"stream_hyb_$h${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      val queries = emb.where(col("vec_id") < 30)
+        .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("qv"))
+      Replay(s, Replay.parts(queries, 2, "query_id"), s"stream_hyb_$h") { q =>
+        val qdf = q.withColumn("ts", timestamp_seconds(col("query_id") * 7))
+        val den = Ann.ivfSearchStreamCandidates(s, ivfTbl, cents,
+            qdf.select("query_id", "qv", "ts"), 2)
+          .select(col("query_id"), col("ts"), lit(1).as("tag"),
+            col("neighbor_id").as("id"), col("cos").as("score"))
+        val idf = log((col("n") - col("df") + lit(0.5)) /
+          (col("df") + lit(0.5)) + lit(1.0))
+        val lex = qdf
+          .withColumn("term", element_at(array(vocab.map(lit): _*),
+            (col("query_id") % 4 + 1).cast("int")))
+          .join(posts.select("term", "doc_id", "tf", "dl"), Seq("term"))
+          .join(broadcast(termStats), Seq("term"))
+          .withColumn("avgdl", col("sdl").cast("double") / col("n"))
+          .select(col("query_id"), col("ts"), lit(0).as("tag"),
+            col("doc_id").as("id"),
+            Quant.q4(idf * (col("tf") * lit(2.2)) / (col("tf") + lit(1.2) *
+              (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))).as("score"))
+        lex.unionByName(den)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
+          .agg(TopKAgg.topK(when(col("tag") === 0, col("score")), col("id"), 5)
+              .as("lex5"),
+            TopKAgg.topK(when(col("tag") === 1, col("score")), col("id"), 5)
+              .as("den5"))
+          .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
+            posexplode(graft.similarity.Fusion.rrfFuseArrays(
+              col("lex5"), col("den5"), 60, 3)))
+          .select(col("ws"), col("query_id"), (col("pos") + 1).cast("long")
+              .as("fused_rank"), col("col.id").as("id"),
+            Quant.q4(col("col.fused_score")).as("fused_score"),
+            col("col.n_lists").as("n_lists"), col("col.best_rank").as("best_rank"))
+      }
     },
     Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
       |        FROM embeddings),

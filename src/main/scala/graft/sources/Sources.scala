@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** Source adapters mirroring the reference's ingestion surface (SURVEY §1.4):
   *
   *  - in-memory replay (reference BenchmarkQuery.h:144-259 replays byte
-  *    vectors) → [[ReplaySource]] over MemoryStream: push typed rows in
-  *    batches, drive a streaming query deterministically — the unit-test and
-  *    micro-bench ingestion path.
+  *    vectors) → [[replay]] over MemoryStream: push typed rows in batches
+  *    from a generator, the micro-bench ingestion path. A finite input
+  *    replayed into one query, trigger by trigger, is
+  *    [[graft.streaming.Replay]].
   *  - TCP text source (reference RemoteBenchmark/remoteSource.cpp) →
   *    [[socketEvents]]: Spark's socket source plus schema parsing. Line
   *    format: csv `event_id,ts_epoch_us,user_id,event_type,value`.

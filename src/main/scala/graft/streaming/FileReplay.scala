@@ -25,7 +25,7 @@ import scala.jdk.CollectionConverters._
   * part file's mtime 1 s apart in name order. Replaying f files with
   * `maxFilesPerTrigger = f/k` then yields k micro-batches carrying
   * ascending `orderCol` ranges — the same event-time-ordered replay the
-  * MemoryStream fixtures construct by sorting and chunking driver-side.
+  * [[Replay.parts]] constructs by sorting and chunking driver-side.
   */
 object FileReplay {
 
@@ -33,8 +33,9 @@ object FileReplay {
     * `dir` (replaced if present), mtime-staggered in range order. With
     * `tail`, one extra file is staged LAST — a final micro-batch of its
     * own whose only job is making the source apply the last data batch's
-    * watermark (watermark updates lag one micro-batch; MemoryStream
-    * fixtures do this with a trailing addData of an already-seen row).
+    * watermark (watermark updates lag one micro-batch; a [[Replay]] does
+    * this with [[Replay.Chunks.flushed]], a resend of an already-seen
+    * row).
     * Returns `dir`.
     */
   def stageOrdered(df: DataFrame, dir: String, orderCol: String,

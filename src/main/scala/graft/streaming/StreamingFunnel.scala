@@ -91,15 +91,16 @@ object StreamingFunnel {
     }
     override def handleInputRows(key: (Long, K), rows: Iterator[StepIn[K]],
         tv: TimerValues): Iterator[LiveOut[K]] = {
-      val prev = if (st.exists()) st.get() else FunnelState(0L, Nil, Nil)
+      // one timer per key, at its window's close, armed with the key's
+      // first state: a key with state has its timer (the timer clears the
+      // state), so no timer listing and no duplicate register
+      val armed = st.exists()
+      val prev = if (armed) st.get() else FunnelState(0L, Nil, Nil)
       val evs = (prev.ts.zip(prev.ss) ++ rows.map(r => (r.t, r.s))).sorted
       val d = depthOf(evs)
       val seq = prev.seq + 1
       st.update(FunnelState(seq, evs.map(_._1), evs.map(_._2)))
-      // one timer per key at the window's close (listTimers guards the
-      // re-register on later triggers — timers are per-expiry, not upsert)
-      val exp = (key._1 + windowSec) * 1000L
-      if (!getHandle.listTimers().contains(exp)) getHandle.registerTimer(exp)
+      if (!armed) getHandle.registerTimer((key._1 + windowSec) * 1000L)
       if (d >= 1) Iterator.single(LiveOut(key._1, key._2, seq, d,
         fin = false))
       else Iterator.empty

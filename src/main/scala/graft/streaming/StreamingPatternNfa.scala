@@ -49,9 +49,10 @@ object StreamingPatternNfa {
         Encoders.product[(Long, Int)], TTLConfig.NONE)
     override def handleInputRows(key: (Long, K), rows: Iterator[EvIn[K]],
         tv: TimerValues): Iterator[NfaOut[K]] = {
+      // the window-close timer is armed with the key's first events and
+      // clears them when it fires (see StreamingFunnel's LiveProc)
+      if (!st.exists()) getHandle.registerTimer((key._1 + windowSec) * 1000L)
       st.appendList(rows.map(r => (r.t, r.mask)).toArray)
-      val exp = (key._1 + windowSec) * 1000L
-      if (!getHandle.listTimers().contains(exp)) getHandle.registerTimer(exp)
       Iterator.empty
     }
     override def handleExpiredTimer(key: (Long, K), tv: TimerValues,
@@ -82,9 +83,10 @@ object StreamingPatternNfa {
         Encoders.product[(Long, Int)], TTLConfig.NONE)
     override def handleInputRows(key: (Long, K), rows: Iterator[EvIn[K]],
         tv: TimerValues): Iterator[NfaAllOut[K]] = {
+      // the window-close timer is armed with the key's first events and
+      // clears them when it fires (see StreamingFunnel's LiveProc)
+      if (!st.exists()) getHandle.registerTimer((key._1 + windowSec) * 1000L)
       st.appendList(rows.map(r => (r.t, r.mask)).toArray)
-      val exp = (key._1 + windowSec) * 1000L
-      if (!getHandle.listTimers().contains(exp)) getHandle.registerTimer(exp)
       Iterator.empty
     }
     override def handleExpiredTimer(key: (Long, K), tv: TimerValues,

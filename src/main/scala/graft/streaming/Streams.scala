@@ -180,7 +180,10 @@ object Streams {
     * streaming queries.
     */
   def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // getAll holds only the keys set on the session; getOption would also
+    // return a default, and restoring that would leave the key set
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
@@ -195,12 +198,11 @@ object Streams {
     * `chmod` once for each file it creates. On other file systems
     * `FileSystem.rename` need not replace an existing file atomically.
     *
-    * Every session this program builds sets it (Bench, Verify, Explain,
-    * ScaleSmoke and the test session), so all their queries write
-    * checkpoints one way. [[withRocksDb]] and `ReferenceQueries.replayEvents`
-    * set it again for their scope: they are how a session built elsewhere,
-    * such as the benchmark harness's or a `SparkEntry` caller's, runs its
-    * streaming queries.
+    * Every session this program builds ([[graft.LocalSession]]) sets it, so
+    * all their queries write checkpoints one way. [[withRocksDb]], and so every [[Replay]], sets it
+    * again for its scope: that is how a session built elsewhere, such as
+    * the benchmark harness's or a `SparkEntry` caller's, runs its streaming
+    * queries.
     */
   val checkpointFiles: (String, String) =
     "spark.sql.streaming.checkpointFileManagerClass" ->
@@ -219,22 +221,4 @@ object Streams {
       // path (background maintenance), which is the production posture too
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
       checkpointFiles)(body)
-
-  /** Drains a streaming DataFrame into an in-memory table and returns it —
-    * the test/bench harness for streaming runs (driver data is finite).
-    */
-  def runToTable(
-      spark: SparkSession,
-      stream: DataFrame,
-      name: String,
-      outputMode: String): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
-  }
 }

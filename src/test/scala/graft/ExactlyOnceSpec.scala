@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.streaming.{Streams, StreamingCountWindows}
+import graft.streaming.{Replay, Streams, StreamingCountWindows}
 
 /** Scabbard-parity evidence (SURVEY §2.7): exactly-once across restart is
   * Structured Streaming checkpointing + replayable source + idempotent sink.
@@ -123,8 +123,7 @@ class ExactlyOnceSpec extends SparkTestBase {
   test("streaming sliding count window == batch trailing aggregate") {
     val stream = Streams.events(spark, sfDir)
     val out = StreamingCountWindows.slidingTrailingAvg(spark, stream, 50).toDF()
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_slide_cnt", "append"))
+    val got = Replay.drain(spark, out, "s_slide_cnt", "append")
 
     val f = CountWindows.frame(Seq("user_id"), Seq(col("es"), col("event_id")), 50)
     val batch = Tables.eventsWithEpoch(spark, sfDir)

@@ -6,34 +6,6 @@ import graft.streaming.{Streams, StreamingGapFill}
 
 class GapFillSpec extends SparkTestBase {
 
-  /** Runs `body`, returning the WARN (or worse) messages Spark's timer
-    * state (`TimerStateImpl`) logged meanwhile.
-    */
-  private def timerWarnings(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("timer-warnings", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLoggerName.endsWith(".TimerStateImpl") && e.getLevel.isMoreSpecificThan(Level.WARN))
-          got.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(appender, Level.WARN, null)
-    ctx.updateLoggers()
-    try body
-    finally {
-      root.removeAppender(appender.getName)
-      ctx.updateLoggers()
-      appender.stop()
-    }
-    got.toArray(Array.empty[String]).toSeq
-  }
-
   test("gaps between a key's first and last window emit cnt=0, sum=NULL") {
     import spark.implicits._
     val agg = Seq(

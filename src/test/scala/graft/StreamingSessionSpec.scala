@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{AggFn, AggSpec, SessionWindows}
-import graft.streaming.Streams
+import graft.streaming.{Replay, Streams}
 
 /** Session windows in streaming mode: gap-merged per-key sessions with a
   * watermark must agree with the batch SessionWindows operator on every
@@ -18,7 +18,7 @@ class StreamingSessionSpec extends SparkTestBase {
         graft.operators.Quant.q4(sum(col("value"))).as("sum_v"))
       .select(unix_micros(col("session_window.start")).as("ss"),
         col("user_id"), col("cnt"), col("sum_v"))
-    val got = Streams.runToTable(spark, stream, "s_session", "append")
+    val got = Replay.drain(spark, stream, "s_session", "append")
 
     val batch = SessionWindows.aggregate(
       Tables.events(spark, sfDir), col("ts"), 1800,

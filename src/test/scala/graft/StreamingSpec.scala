@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.streaming.{Streams, StreamingCountWindows}
+import graft.streaming.{Replay, Streams, StreamingCountWindows}
 
 /** Streaming-mode equivalence: the same operator definitions, run as
   * Structured Streaming queries over the replayed events parquet, must agree
@@ -21,7 +21,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming sliding window agg (complete mode) == batch") {
     val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
+    val out = Replay.drain(spark,
       Streams.windowAgg(stream, 3600, 60, Seq("event_type"), aggs),
       "s_sliding", "complete")
     val batch = TimeWindows.aggregate(
@@ -31,7 +31,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming tumbling agg with watermark (append mode) emits finalized windows == batch minus tail") {
     val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
+    val out = Replay.drain(spark,
       Streams.windowAgg(stream, 600, 600, Seq("event_type"), aggs, watermark = Some("10 minutes")),
       "s_tumbling_append", "append")
     val batch = TimeWindows.aggregate(
@@ -50,8 +50,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = Streams.events(spark, sfDir)
     val out = StreamingCountWindows.tumbling(spark, stream, 10).toDF()
       .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count", "append"))
+    val got = Replay.drain(spark, out, "s_count", "append")
 
     val batch = CountWindows.tumblingIds(
         Tables.eventsWithEpoch(spark, sfDir),
@@ -66,8 +65,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = Streams.events(spark, sfDir)
     val out = StreamingCountWindows.tumblingGlobal(spark, stream, 100).toDF()
       .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count_global", "append"))
+    val got = Replay.drain(spark, out, "s_count_global", "append")
 
     val batch = CountWindows.tumblingIds(
         Tables.eventsWithEpoch(spark, sfDir),
@@ -82,8 +80,7 @@ class StreamingSpec extends SparkTestBase {
     val stream = Streams.events(spark, sfDir)
     val out = StreamingCountWindows.sliding(spark, stream, 50, 10).toDF()
       .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count_slide", "append"))
+    val got = Replay.drain(spark, out, "s_count_slide", "append")
 
     val batch = CountWindows.slidingAgg(
         Tables.eventsWithEpoch(spark, sfDir)
@@ -100,7 +97,7 @@ class StreamingSpec extends SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val stream = Streams.events(spark, sfDir)
-      val out = Streams.runToTable(spark,
+      val out = Replay.drain(spark,
         Streams.windowAgg(stream, 3600, 60, Seq("event_type"), aggs),
         "s_sliding_rocks", "complete")
       val batch = TimeWindows.aggregate(
@@ -124,7 +121,7 @@ class StreamingSpec extends SparkTestBase {
     val j = Streams.windowedThetaJoin(l, r, "l_ts", "r_ts", 600,
         col("user_id") === col("r_user"), "10 minutes")
       .select(col("user_id"), col("l_id"), col("r_id"))
-    val got = Streams.runToTable(spark, j, "s_join", "append")
+    val got = Replay.drain(spark, j, "s_join", "append")
 
     val batchRows = graft.queries.ReferenceQueries.qJoinTheta
       .build(spark, sfDir).select("user_id", "l_id", "r_id")
@@ -137,9 +134,9 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming paned sliding agg (chained stateful aggs) emits finalized windows matching batch") {
     val stream = Streams.events(spark, sfDir)
-    val out = Streams.withRocksDb(spark)(Streams.runToTable(spark,
+    val out = Replay.drain(spark,
       Streams.windowAggPaned(stream, 3600, 60, Seq("event_type"), allFive, "10 minutes"),
-      "s_paned", "append"))
+      "s_paned", "append")
     val batch = TimeWindows.aggregatePaned(
       Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), allFive)
     assert(out.count() > 0, "no finalized windows emitted")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.Streams
+import graft.streaming.{Replay, Streams}
 
 /** J1 in streaming mode: a stream probing a static broadcast dimension
   * (YSB's shape — filter → project → static join → tumbling agg) must match
@@ -21,7 +21,7 @@ class StreamingYsbSpec extends SparkTestBase {
       .agg(count(lit(1)).as("cnt"), max(col("es")).as("max_ts"))
       .select(col("window.start").cast("long").as("ws"), col("campaign_id"),
         col("cnt"), col("max_ts"))
-    val got = Streams.runToTable(spark, joined, "s_ysb", "complete")
+    val got = Replay.drain(spark, joined, "s_ysb", "complete")
     val batch = queries.ReferenceQueries.qYsb.build(spark, sfDir)
     assertSameRows(got, batch)
   }

@@ -5,9 +5,8 @@ import java.time.{LocalDateTime, ZoneOffset}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
-import org.scalacheck.rng.Seed
 import graft.operators._
 
 /** Generated-input checks of the integer pane kernel: `aggregatePaned` must
@@ -148,22 +147,8 @@ class TimeWindowsPropSpec extends SparkTestBase {
     bad.isEmpty :| s"epochSeconds != floor(us / 1e6) for (us, es) ${bad.mkString(", ")}"
   }
 
-  /** Runs `prop` from a random (or GRAFT_PROP_SEED) seed, without
-    * shrinking (each case is several Spark jobs), failing with the seed.
-    */
-  private def check(minOk: Int)(prop: Prop): Unit = {
-    val seed = sys.env.get("GRAFT_PROP_SEED")
-      .map(Seed.fromBase64(_).get).getOrElse(Seed.random())
-    val params = Check.Parameters.default
-      .withMinSuccessfulTests(minOk).withWorkers(1).withInitialSeed(seed)
-    val res = Check.check(params, prop)
-    assert(res.passed,
-      s"failed with GRAFT_PROP_SEED=${seed.toBase64}: " +
-        org.scalacheck.util.Pretty.pretty(res, org.scalacheck.util.Pretty.Params(2)))
-  }
-
   test("generated events, UTC session: aggregatePaned == aggregate and epochSeconds is floor") {
-    check(30)(Prop.forAllNoShrink(genCase) { c =>
+    propCheck(30)(Prop.forAllNoShrink(genCase) { c =>
       val (got, want) = (paned(spark, c), native(spark, c))
       ((got == want) :| s"$c\npaned:  $got\nnative: $want") &&
         epochSecondsHold(spark, c)
@@ -173,7 +158,7 @@ class TimeWindowsPropSpec extends SparkTestBase {
   test("generated events, non-UTC session: NTZ buckets as wall clock in UTC, LTZ as the instant") {
     val zoned = spark.newSession()
     zoned.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
-    check(12)(Prop.forAllNoShrink(genCase) { c =>
+    propCheck(12)(Prop.forAllNoShrink(genCase) { c =>
       // Both strategies, in the same zoned session, must give the UTC
       // session's windows: an instant's do not depend on the zone, and an
       // NTZ wall clock is read as UTC.
@@ -186,7 +171,7 @@ class TimeWindowsPropSpec extends SparkTestBase {
 
   test("generated int, long and NaN-holding double values: aggregatePaned == aggregate, types too") {
     val gen = for { c <- genCase; v <- genValues } yield (c, v)
-    check(20)(Prop.forAllNoShrink(gen) { case (c, v) =>
+    propCheck(20)(Prop.forAllNoShrink(gen) { case (c, v) =>
       sameAsNative(c, typed(spark, c, v)) :| s"values $v"
     })
   }
@@ -199,7 +184,7 @@ class TimeWindowsPropSpec extends SparkTestBase {
       ntz <- Gen.oneOf(true, false)
       v <- genValues
     } yield (Case(evs, shape._1, shape._2, keyed, ntz), v)
-    check(15)(Prop.forAllNoShrink(gen) { case (c, v) =>
+    propCheck(15)(Prop.forAllNoShrink(gen) { case (c, v) =>
       sameAsNative(c, typed(spark, c, v)) :| s"values $v"
     })
   }
