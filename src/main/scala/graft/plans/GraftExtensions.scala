@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ArraySort, Expression, ExpressionInfo}
 import graft.functions.{CosineSimilarity, HeavyHittersAgg, KmvAgg, SortedIntersectSize, TopKAgg, VectorSumAgg}
 
-/** SQL surface for the library's custom Catalyst expressions, so `spark.sql`
-  * users get them too:
+/** Session extensions: the library's custom Catalyst expressions as SQL
+  * functions, so `spark.sql` users get them too, and the [[MvRewrite]]
+  * optimizer rule. No other optimizer rule is injected. The functions:
   *
   *   graft_cosine(a, b)            — fused cosine over array<float>
   *   graft_topk(score, id, k)      — bounded-heap top-k aggregate
@@ -17,16 +18,16 @@ import graft.functions.{CosineSimilarity, HeavyHittersAgg, KmvAgg, SortedInterse
   *   graft_qsketch(hash, v, k)     — bottom-k quantile sketch aggregate
   *   graft_qsketch_merge(qsk, k)   — merge stored quantile sketches
   *
-  * Register either at session build
-  * (`.withExtensions(new GraftExtensions)`) or on a live session
-  * (`GraftExtensions.register(spark)`).
+  * Install both at session build (`.withExtensions(new GraftExtensions)`),
+  * or register the functions alone on a live session
+  * (`GraftExtensions.register(spark)`; [[MvRewrite.serving]] adds the rule
+  * for the scope of one served query).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.definitions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    e.injectOptimizerRule(_ => PaneRewrite())
     e.injectOptimizerRule(_ => MvRewrite())
   }
 }

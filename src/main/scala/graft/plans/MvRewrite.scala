@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -359,13 +359,51 @@ object MvRegistry {
   }
 }
 
-/** Re-entrancy latch for [[MvRewrite.tryCms]]'s expected-plan
-  * construction: matching optimizes a REFERENCE `Cms.build` plan through
-  * the session's own optimizer — which includes this rule — so without
-  * the latch the reference plan could itself be rewritten to the store
-  * and never equal the query's corpus-shaped subtree.
-  */
 object MvRewrite {
+
+  /** Serves the view registered as `name` while `body` runs, the one way
+    * into the rewrite. `register` (the registration, and any refresh that
+    * follows it) and `body` run inside one `try`; the view is deregistered
+    * in its `finally` whatever throws, so a failed refresh cannot leave a
+    * view in the process-wide [[MvRegistry]] to serve later queries. The
+    * rule is live only while `body` runs: it is added to the session's
+    * `extraOptimizations` if they hold no `MvRewrite` yet, and then
+    * exactly that instance is removed again. So a refresh is never served
+    * from the view it refreshes, and a rule the session already held
+    * stays. (The copy [[GraftExtensions]] injects sits in the optimizer's
+    * own batches, out of this check's sight; a second pass over a served
+    * plan finds no registered base left to rewrite.)
+    */
+  def serving[T](s: SparkSession, name: String)(register: => Unit)(body: => T): T =
+    try {
+      register
+      val live = s.experimental.extraOptimizations
+      if (live.exists(_.isInstanceOf[MvRewrite])) body
+      else {
+        val rule = MvRewrite()
+        s.experimental.extraOptimizations = live :+ rule
+        try body
+        finally s.experimental.extraOptimizations =
+          s.experimental.extraOptimizations.filterNot(_ eq rule)
+      }
+    } finally MvRegistry.deregister(name)
+
+  /** The root paths of every file scan in `df`'s optimized plan: what a
+    * served query reads.
+    */
+  def scanRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Seq.empty
+      }
+    }.flatten
+
+  // Re-entrancy latch for [[MvRewrite.tryCms]]'s expected-plan
+  // construction: matching optimizes a REFERENCE `Cms.build` plan through
+  // the session's own optimizer — which includes this rule — so without
+  // the latch the reference plan could itself be rewritten to the store
+  // and never equal the query's corpus-shaped subtree.
   private val inRule = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }

@@ -1328,7 +1328,7 @@ object CrawlQueries {
     // exercised at 2 triggers, extra triggers are overhead
     (s, d) => Replay(s, Replay.parts(Tables.documents(s, d)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source")),
-        2, "doc_id").flushed, "stream_curation") { docs =>
+        2, "doc_id"), "stream_curation") { docs =>
       // spread the replay across cores BEFORE the regex-heavy quality
       // scoring: a MemoryStream block is ONE partition (a real source's
       // scan splits provide this parallelism for free)
@@ -1365,10 +1365,8 @@ object CrawlQueries {
   /** Streaming curation replayed from a FILE SOURCE — same rationale as
     * [[qDedupStreamMinhashFiles]]: the regex-heavy quality scoring gets a
     * scan split per staged file instead of the driver's single-threaded
-    * MemoryStream feed. The staged tail file (a duplicate of the max-id
-    * row, listed last by mtime) is the file-source spelling of
-    * `Replay.Chunks.flushed`: one extra micro-batch so the final data batch's
-    * watermark is APPLIED and its windows emit. Oracle unchanged.
+    * MemoryStream feed. The no-data trigger after the last file batch
+    * applies its watermark, as in the replayed twin. Oracle unchanged.
     */
   val qStreamCurationFiles = Fixture(
     "q_stream_curation_files",
@@ -1377,8 +1375,7 @@ object CrawlQueries {
         .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_curation_${Integer.toHexString(d.hashCode)}").getAbsolutePath
-      graft.streaming.FileReplay.stageOrdered(docs, dir, "doc_id", 32,
-        tail = Some(docs.orderBy(col("doc_id").desc).limit(1)))
+      graft.streaming.FileReplay.stageOrdered(docs, dir, "doc_id", 32)
       val stream = s.readStream
         .schema("doc_id LONG, text STRING, source STRING")
         .option("maxFilesPerTrigger", "16")

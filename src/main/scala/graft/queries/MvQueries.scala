@@ -7,6 +7,8 @@ import graft.dedup.Dedup
 import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
+import graft.plans.{MvRegistry, MvRewrite}
+import graft.plans.MvRegistry.AggDef
 import graft.similarity.Ann
 import graft.streaming.Replay
 import OracleSql._
@@ -26,15 +28,13 @@ object MvQueries {
     * and ROLL UP (sum of sums, SUM of partial counts, max of maxes). The
     * fixture REQUIREs the rewritten plan reads the MV and not the base —
     * a silent non-rewrite fails the gate — and executes while the rule is
-    * live (localCheckpoint) so the restore in finally can't unwind it.
+    * live (localCheckpoint inside [[MvRewrite.serving]]), so leaving the
+    * scope can't unwind it.
     * The oracle is the plain base aggregation: rewrite must be invisible.
     */
   val qMvRewrite = Fixture(
     "q_mv_rewrite",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
       val mvPath = s"${sys.props("java.io.tmpdir")}/graft_mv/$h"
@@ -42,29 +42,20 @@ object MvQueries {
           sum(col("n_chars")).as("sum_chars"), max(col("n_chars")).as("max_chars"))
         .write.mode("overwrite").parquet(mvPath)
       val name = s"docs_by_lang_source_$h"
-      MvRegistry.register(s, name, s"$d/documents.parquet",
-        Seq("lang", "source"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_chars", "sum", Some("n_chars")),
-          AggDef("max_chars", "max", Some("n_chars"))), mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.register(s, name, s"$d/documents.parquet",
+          Seq("lang", "source"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_chars", "sum", Some("n_chars")),
+            AggDef("max_chars", "max", Some("n_chars"))), mvPath)
+      } {
         val q = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("total_chars"), max(col("n_chars")).as("max_chars"))
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv")) &&
           !scans.exists(_.contains("documents.parquet")),
           s"MV rewrite did not fire; scans = ${scans.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some("""SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
@@ -81,9 +72,6 @@ object MvQueries {
   val qMvRewriteFiltered = Fixture(
     "q_mv_rewrite_filtered",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
       val mvPath = s"${sys.props("java.io.tmpdir")}/graft_mv_f/$h"
@@ -91,29 +79,20 @@ object MvQueries {
           sum(col("n_chars")).as("sum_chars"))
         .write.mode("overwrite").parquet(mvPath)
       val name = s"docs_mv_filtered_$h"
-      MvRegistry.register(s, name, s"$d/documents.parquet",
-        Seq("lang", "source"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_chars", "sum", Some("n_chars"))), mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.register(s, name, s"$d/documents.parquet",
+          Seq("lang", "source"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_chars", "sum", Some("n_chars"))), mvPath)
+      } {
         val q = docs.where(col("lang").isin("en", "de"))
           .groupBy("source").agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("total_chars"))
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv_f")) &&
           !scans.exists(_.contains("documents.parquet")),
           s"filtered MV rewrite did not fire; scans = ${scans.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some("""SELECT source, count(*) AS n_docs,
@@ -129,40 +108,28 @@ object MvQueries {
   val qMvRewriteHaving = Fixture(
     "q_mv_rewrite_having",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
       val mvPath = s"${sys.props("java.io.tmpdir")}/graft_mv_h/$h"
       docs.groupBy("lang", "source").agg(count(lit(1)).as("cnt"),
           sum(col("n_chars")).as("sum_chars"))
         .write.mode("overwrite").parquet(mvPath)
-      val name = s"docs_mv_having_$h"
-      MvRegistry.register(s, name, s"$d/documents.parquet",
-        Seq("lang", "source"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_chars", "sum", Some("n_chars"))), mvPath)
       docs.createOrReplaceTempView(s"docs_mvh_$h")
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      val name = s"docs_mv_having_$h"
+      MvRewrite.serving(s, name) {
+        MvRegistry.register(s, name, s"$d/documents.parquet",
+          Seq("lang", "source"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_chars", "sum", Some("n_chars"))), mvPath)
+      } {
         val q = s.sql(
           s"""SELECT lang, count(1) AS n_docs, sum(n_chars) AS total_chars
              |FROM docs_mvh_$h GROUP BY lang HAVING count(1) >= 75""".stripMargin)
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv_h")) &&
           !scans.exists(_.contains("documents.parquet")),
           s"HAVING MV rewrite did not fire; scans = ${scans.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some("""SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
@@ -182,9 +149,6 @@ object MvQueries {
   val qMvRewriteJoin = Fixture(
     "q_mv_rewrite_join",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val li = Tables.lineitem(s, d)
       val ord = Tables.orders(s, d)
       val h = Integer.toHexString(d.hashCode)
@@ -194,23 +158,17 @@ object MvQueries {
         .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
         .write.mode("overwrite").parquet(mvPath)
       val name = s"li_by_priority_$h"
-      MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
-        s"$d/orders.parquet", "l_orderkey", "o_orderkey",
-        Seq("o_orderpriority"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
+          s"$d/orders.parquet", "l_orderkey", "o_orderkey",
+          Seq("o_orderpriority"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
+      } {
         val q = li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"))
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv_j")) &&
           !scans.exists(p => p.contains("lineitem.parquet") ||
             p.contains("orders.parquet")),
@@ -220,9 +178,6 @@ object MvQueries {
         q.select(col("o_orderpriority"), col("n_items"),
           Quant.q4(col("sum_qty")).as("sum_qty"))
           .localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""SELECT o_orderpriority, count(*) AS n_items,
@@ -244,9 +199,6 @@ object MvQueries {
   val qMvRewriteJoinFiltered = Fixture(
     "q_mv_rewrite_join_filtered",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val li = Tables.lineitem(s, d)
       val ord = Tables.orders(s, d)
       val h = Integer.toHexString(d.hashCode)
@@ -256,24 +208,18 @@ object MvQueries {
         .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
         .write.mode("overwrite").parquet(mvPath)
       val name = s"li_by_priority_f_$h"
-      MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
-        s"$d/orders.parquet", "l_orderkey", "o_orderkey",
-        Seq("o_orderpriority"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
+          s"$d/orders.parquet", "l_orderkey", "o_orderkey",
+          Seq("o_orderpriority"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
+      } {
         val q = li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .where(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"))
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv_jf")) &&
           !scans.exists(p => p.contains("lineitem.parquet") ||
             p.contains("orders.parquet")),
@@ -284,9 +230,6 @@ object MvQueries {
         q.select(col("o_orderpriority"), col("n_items"),
           Quant.q4(col("sum_qty")).as("sum_qty"))
           .localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""SELECT o_orderpriority, count(*) AS n_items,
@@ -312,10 +255,7 @@ object MvQueries {
   val qMvIvmServe = Fixture(
     "q_mv_ivm_serve",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -325,32 +265,22 @@ object MvQueries {
       val name = s"docs_lang_rollup_$h"
       // register at v0, BEFORE the refresh — freshness must come from the
       // pointer resolution, not from re-registration
-      MvRegistry.register(s, name, s"$d/documents.parquet", Seq("lang"),
-        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("n_chars"))),
-        root)
-      // day-2 refresh: stored view + CDC delta only, committed as v1
-      SnapshotLake.commit(
-        graft.operators.Ivm.applyDelta(SnapshotLake.read(s, root),
-          ivmDelta(docs), Seq("lang")), root, 1L)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.register(s, name, s"$d/documents.parquet", Seq("lang"),
+          Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("n_chars"))),
+          root)
+        // day-2 refresh: stored view + CDC delta only, committed as v1
+        SnapshotLake.commit(
+          graft.operators.Ivm.applyDelta(SnapshotLake.read(s, root),
+            ivmDelta(docs), Seq("lang")), root, 1L)
+      } {
         val q = docs.groupBy("lang").agg(count(lit(1)).as("cnt"),
           sum(col("n_chars")).as("sum_v"))
-        val leaves = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(q)
         require(leaves.size == 1 && leaves.head.contains("graft_mv_ivm") &&
           leaves.head.stripSuffix("/").endsWith("/v1"),
           s"expected exactly the refreshed v1 MV leaf; got ${leaves.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""$ivmFinSql
@@ -373,43 +303,30 @@ object MvQueries {
   val qStreamMvServe = Fixture(
     "q_stream_mv_serve",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val docs = Tables.documents(s, d)
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_mvstream_${System.nanoTime}").getAbsolutePath
       SnapshotLake.commit(
         graft.operators.Ivm.view(docs, Seq("lang"), "n_chars"), root, 0L)
       val name = s"docs_stream_mv_${System.nanoTime}"
-      MvRegistry.register(s, name, s"$d/documents.parquet", Seq("lang"),
-        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("n_chars"))),
-        root)
-      Replay.start(s, Replay.each(
-          ivmDelta(docs.where(col("doc_id") % 2 === 0)),
-          ivmDelta(docs.where(col("doc_id") % 2 === 1)))) {
-        graft.streaming.StreamingIvm.start(_, root, Seq("lang"), s"${root}_ckpt")
-      }
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.register(s, name, s"$d/documents.parquet", Seq("lang"),
+          Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("n_chars"))),
+          root)
+        Replay.start(s, Replay.each(
+            ivmDelta(docs.where(col("doc_id") % 2 === 0)),
+            ivmDelta(docs.where(col("doc_id") % 2 === 1)))) {
+          graft.streaming.StreamingIvm.start(_, root, Seq("lang"), s"${root}_ckpt")
+        }
+      } {
         val served = docs.groupBy("lang").agg(count(lit(1)).as("cnt"),
           sum(col("n_chars")).as("sum_v"))
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_mvstream") &&
           leaves.head.stripSuffix("/").endsWith("/v2"),
           s"expected the stream-refreshed v2 leaf; got ${leaves.mkString(", ")}")
         served.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""$ivmFinSql
@@ -495,10 +412,7 @@ object MvQueries {
   val qStreamMvJoinServe = Fixture(
     "q_stream_mv_join_serve",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val li = Tables.lineitem(s, d)
       val ord = Tables.orders(s, d)
       val dims = Seq(ord -> Seq("l_orderkey" -> "o_orderkey"))
@@ -508,39 +422,29 @@ object MvQueries {
         graft.operators.Ivm.viewJoin(li, dims, Seq("o_orderpriority"),
           "l_quantity"), root, 0L)
       val name = s"li_join_stream_mv_${System.nanoTime}"
-      MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
-        s"$d/orders.parquet", "l_orderkey", "o_orderkey",
-        Seq("o_orderpriority"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_v", "sum", Some("l_quantity"))), root)
-      Replay.start(s, Replay.each(
-          liDelta(li.where(col("l_orderkey") % 2 === 0)),
-          liDelta(li.where(col("l_orderkey") % 2 === 1)))) {
-        graft.streaming.StreamingIvm.startJoin(_, root, dims,
-          Seq("o_orderpriority"), s"${root}_ckpt")
-      }
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
+          s"$d/orders.parquet", "l_orderkey", "o_orderkey",
+          Seq("o_orderpriority"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_v", "sum", Some("l_quantity"))), root)
+        Replay.start(s, Replay.each(
+            liDelta(li.where(col("l_orderkey") % 2 === 0)),
+            liDelta(li.where(col("l_orderkey") % 2 === 1)))) {
+          graft.streaming.StreamingIvm.startJoin(_, root, dims,
+            Seq("o_orderpriority"), s"${root}_ckpt")
+        }
+      } {
         val served = li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_v"))
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_mvjstream") &&
           leaves.head.stripSuffix("/").endsWith("/v2"),
           s"expected the stream-refreshed v2 join-MV leaf; got ${leaves.mkString(", ")}")
         served.select(col("o_orderpriority"), col("cnt"),
           Quant.q4(col("sum_v")).as("sum_v"))
           .localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""$liFinSql
@@ -999,10 +903,7 @@ object MvQueries {
   val qStreamMvJoinMinmaxServe = Fixture(
     "q_stream_mv_join_minmax_serve",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val li = Tables.lineitem(s, d)
       val ord = Tables.orders(s, d)
       val dims = Seq(ord -> Seq("l_orderkey" -> "o_orderkey"))
@@ -1014,14 +915,6 @@ object MvQueries {
       SnapshotLake.commitMorBase(li.select(liRowId.as("rid"),
         col("l_orderkey"), col("l_quantity")), factRoot, 0L,
         buckets = 8, key = "rid")
-      val name = s"li_jfull_mv_${System.nanoTime}"
-      MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
-        s"$d/orders.parquet", "l_orderkey", "o_orderkey",
-        Seq("o_orderpriority"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_v", "sum", Some("l_quantity")),
-          AggDef("min_v", "min", Some("l_quantity")),
-          AggDef("max_v", "max", Some("l_quantity"))), viewRoot)
       def deltaOf(part: DataFrame) = part.where(liDel)
           .select(liRowId.as("rid"), col("l_orderkey"), lit("D").as("op"),
             col("l_quantity").as("old_v"),
@@ -1047,24 +940,25 @@ object MvQueries {
           "old_v DOUBLE, new_v DOUBLE")
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir)
-      Replay.drain(s)(graft.streaming.StreamingIvm.startJoinFull(
-        stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
-        "l_quantity", s"$base/cp"))
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      val name = s"li_jfull_mv_${System.nanoTime}"
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerJoin(s, name, s"$d/lineitem.parquet",
+          s"$d/orders.parquet", "l_orderkey", "o_orderkey",
+          Seq("o_orderpriority"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_v", "sum", Some("l_quantity")),
+            AggDef("min_v", "min", Some("l_quantity")),
+            AggDef("max_v", "max", Some("l_quantity"))), viewRoot)
+        Replay.drain(s)(graft.streaming.StreamingIvm.startJoinFull(
+          stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
+          "l_quantity", s"$base/cp"))
+      } {
         val served = li.join(ord, col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_v"),
             min(col("l_quantity")).as("min_v"),
             max(col("l_quantity")).as("max_v"))
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_jfmv") &&
           leaves.head.stripSuffix("/").endsWith("/v2"),
           s"expected the stream-refreshed v2 full-join-MV leaf; got " +
@@ -1072,9 +966,6 @@ object MvQueries {
         served.select(col("o_orderpriority"), col("cnt"),
           Quant.q4(col("sum_v")).as("sum_v"), col("min_v"), col("max_v"))
           .localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     qIvmJoinMinmax.oracle)
@@ -1211,9 +1102,6 @@ object MvQueries {
   val qMvRewriteSnowflake = Fixture(
     "q_mv_rewrite_snowflake",
     (s, d) => {
-      import graft.plans.{MvRewrite, MvRegistry}
-      import graft.plans.MvRegistry.AggDef
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val li = Tables.lineitem(s, d)
       val ord = Tables.orders(s, d)
       val cust = Tables.customer(s, d)
@@ -1225,24 +1113,18 @@ object MvQueries {
         .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("sum_qty"))
         .write.mode("overwrite").parquet(mvPath)
       val name = s"li_by_segment_$h"
-      MvRegistry.registerSnowflake(s, name, s"$d/lineitem.parquet",
-        Seq(s"$d/orders.parquet" -> Seq("l_orderkey" -> "o_orderkey"),
-          s"$d/customer.parquet" -> Seq("o_custkey" -> "c_custkey")),
-        Seq("c_mktsegment"),
-        Seq(AggDef("cnt", "count", None),
-          AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerSnowflake(s, name, s"$d/lineitem.parquet",
+          Seq(s"$d/orders.parquet" -> Seq("l_orderkey" -> "o_orderkey"),
+            s"$d/customer.parquet" -> Seq("o_custkey" -> "c_custkey")),
+          Seq("c_mktsegment"),
+          Seq(AggDef("cnt", "count", None),
+            AggDef("sum_qty", "sum", Some("l_quantity"))), mvPath)
+      } {
         val q = chain.groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n_items"),
             Quant.q4(sum(col("l_quantity"))).as("sum_qty"))
-        val scans = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val scans = MvRewrite.scanRoots(q)
         require(scans.exists(_.contains("graft_mv_sf")) &&
           !scans.exists(p => p.contains("lineitem.parquet") ||
             p.contains("orders.parquet") || p.contains("customer.parquet")),
@@ -1251,9 +1133,6 @@ object MvQueries {
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
           "served snowflake plan must be join-free")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""SELECT c_mktsegment, count(*) AS n_items,
@@ -1280,9 +1159,7 @@ object MvQueries {
     "q_mv_rewrite_kmv_distinct",
     (s, d) => {
       import graft.functions.{Kmv, TextFunctions}
-      import graft.plans.{MvRewrite, MvRegistry}
       import graft.sources.SnapshotLake
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val k = 16
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
@@ -1292,15 +1169,14 @@ object MvQueries {
         graft.operators.Ivm.viewKmv(docs, Seq("lang"), "source", k), root, 0L)
       val name = s"docs_lang_distinct_$h"
       // register at v0, BEFORE the refresh — freshness via _CURRENT
-      MvRegistry.registerKmv(s, name, s"$d/documents.parquet", Seq("lang"),
-        "source", k, root)
-      val delta = docs.where(ivmIns).select(col("lang"), lit("I").as("op"),
-        concat(col("source"), lit("_x")).as("new_v"))
-      SnapshotLake.commit(graft.operators.Ivm.applyDeltaKmv(
-        SnapshotLake.read(s, root), delta, Seq("lang"), k), root, 1L)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerKmv(s, name, s"$d/documents.parquet", Seq("lang"),
+          "source", k, root)
+        val delta = docs.where(ivmIns).select(col("lang"), lit("I").as("op"),
+          concat(col("source"), lit("_x")).as("new_v"))
+        SnapshotLake.commit(graft.operators.Ivm.applyDeltaKmv(
+          SnapshotLake.read(s, root), delta, Seq("lang"), k), root, 1L)
+      } {
         val q = docs.groupBy("lang")
           .agg(Kmv.bottomK(TextFunctions.hash64(col("source")), k).as("kmv"))
           .select(col("lang"),
@@ -1308,20 +1184,11 @@ object MvQueries {
               .as("kmv_xor"),
             size(col("kmv")).cast("long").as("sketch_size"),
             Quant.q4(Kmv.estimate(col("kmv"), k)).as("est_distinct"))
-        val leaves = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(q)
         require(leaves.size == 1 && leaves.head.contains("graft_mv_kmv") &&
           leaves.head.stripSuffix("/").endsWith("/v1"),
           s"expected exactly the refreshed v1 KMV leaf; got ${leaves.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     qIvmKmvDistinct.oracle)
@@ -1343,8 +1210,6 @@ object MvQueries {
     "q_mv_rewrite_kmv_rollup",
     (s, d) => {
       import graft.functions.{Kmv, TextFunctions}
-      import graft.plans.{MvRewrite, MvRegistry}
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val k = 16
       val docs = Tables.documents(s, d)
       val h = Integer.toHexString(d.hashCode)
@@ -1352,11 +1217,10 @@ object MvQueries {
       graft.operators.Ivm.viewKmv(docs, Seq("lang", "source"), "text", k)
         .write.mode("overwrite").parquet(mvPath)
       val name = s"docs_text_distinct_$h"
-      MvRegistry.registerKmv(s, name, s"$d/documents.parquet",
-        Seq("lang", "source"), "text", k, mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerKmv(s, name, s"$d/documents.parquet",
+          Seq("lang", "source"), "text", k, mvPath)
+      } {
         val q = docs.where(col("source").isin("src0", "src1", "src2",
             "src3", "src4", "src5", "src6", "src7"))
           .groupBy("lang")
@@ -1366,19 +1230,10 @@ object MvQueries {
               .as("kmv_xor"),
             size(col("kmv")).cast("long").as("sketch_size"),
             Quant.q4(Kmv.estimate(col("kmv"), k)).as("est_distinct"))
-        val leaves = q.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(q)
         require(leaves.size == 1 && leaves.head.contains("graft_mv_kmvr"),
           s"expected exactly the KMV store leaf; got ${leaves.mkString(", ")}")
         q.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""WITH hh AS (SELECT DISTINCT lang, ${h64("text")} AS h
@@ -1680,8 +1535,6 @@ object MvQueries {
     "q_mv_rewrite_quantile",
     (s, d) => {
       import graft.functions.{QuantileSketch, TextFunctions}
-      import graft.plans.{MvRewrite, MvRegistry}
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val k = 64
       val h = Integer.toHexString(d.hashCode)
       val basePath = s"${sys.props("java.io.tmpdir")}/graft_qskbase_$h"
@@ -1700,29 +1553,19 @@ object MvQueries {
           .write.mode("overwrite").parquet(mvPath)
       }
       val name = s"li_qsk_$h"
-      MvRegistry.registerQuantile(s, name, basePath,
-        Seq("l_returnflag", "l_linestatus"), "rid", "l_quantity", k, mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerQuantile(s, name, basePath,
+          Seq("l_returnflag", "l_linestatus"), "rid", "l_quantity", k, mvPath)
+      } {
         val served = qskServe(s.read.parquet(basePath)
           .groupBy("l_returnflag")
           .agg(QuantileSketch.bottomK(TextFunctions.hash64(col("rid")),
             col("l_quantity"), k).as("qsk")))
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_qskmv"),
           s"quantile query must serve from the store alone; got " +
             leaves.mkString(", "))
         served.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(qskServeSql(s"""WITH hh AS (
@@ -1752,8 +1595,6 @@ object MvQueries {
     (s, d) => {
       import s.implicits._
       import graft.functions.Cms
-      import graft.plans.{MvRewrite, MvRegistry}
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val (depth, width) = (4, 8)
       val h = Integer.toHexString(d.hashCode)
       val mvPath = s"${sys.props("java.io.tmpdir")}/graft_cmsmv_$h"
@@ -1763,30 +1604,20 @@ object MvQueries {
           .write.mode("overwrite").parquet(mvPath)
       }
       val name = s"li_cms_$h"
-      MvRegistry.registerCms(s, name, s"$d/lineitem.parquet",
-        Seq("l_linestatus"), "l_returnflag", depth, width, mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerCms(s, name, s"$d/lineitem.parquet",
+          Seq("l_linestatus"), "l_returnflag", depth, width, mvPath)
+      } {
         val vocab = Seq("A", "N", "R", "ZZ-ABSENT")
         val served = Cms.pointEstimate(
           Cms.build(Tables.lineitem(s, d), Seq.empty, col("l_returnflag"),
             depth, width),
           vocab.toDF("term"), "term", depth, width)
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_cmsmv"),
           s"frequency probe must serve from the CMS store alone; got " +
             leaves.mkString(", "))
         served.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""WITH rs AS (SELECT unnest(generate_series(0, 3)) AS r),
@@ -1818,8 +1649,6 @@ object MvQueries {
     (s, d) => {
       import s.implicits._
       import graft.functions.Cms
-      import graft.plans.{MvRewrite, MvRegistry}
-      import org.apache.spark.sql.execution.datasources.LogicalRelation
       val (depth, width) = (4, 8)
       val h = Integer.toHexString(d.hashCode)
       val mvPath = s"${sys.props("java.io.tmpdir")}/graft_cmsfmv_$h"
@@ -1829,31 +1658,21 @@ object MvQueries {
           .write.mode("overwrite").parquet(mvPath)
       }
       val name = s"li_cmsf_$h"
-      MvRegistry.registerCms(s, name, s"$d/lineitem.parquet",
-        Seq("l_linestatus"), "l_returnflag", depth, width, mvPath)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ MvRewrite()
-      try {
+      MvRewrite.serving(s, name) {
+        MvRegistry.registerCms(s, name, s"$d/lineitem.parquet",
+          Seq("l_linestatus"), "l_returnflag", depth, width, mvPath)
+      } {
         val vocab = Seq("A", "N", "R", "ZZ-ABSENT")
         val served = Cms.pointEstimate(
           Cms.build(Tables.lineitem(s, d)
               .where(col("l_linestatus") === "F"),
             Seq.empty, col("l_returnflag"), depth, width),
           vocab.toDF("term"), "term", depth, width)
-        val leaves = served.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten
+        val leaves = MvRewrite.scanRoots(served)
         require(leaves.size == 1 && leaves.head.contains("graft_cmsfmv"),
           s"filtered frequency probe must serve from the CMS store alone; " +
             s"got ${leaves.mkString(", ")}")
         served.localCheckpoint(true)
-      } finally {
-        s.experimental.extraOptimizations = prev
-        MvRegistry.deregister(name)
       }
     },
     Some(s"""WITH rs AS (SELECT unnest(generate_series(0, 3)) AS r),
@@ -1968,14 +1787,13 @@ object MvQueries {
       | GROUP BY 1""".stripMargin))
 
   /** The `events` columns of the funnel and pattern stream fixtures
-    * (`user_id` as a long key), filtered to `steps`: 2 event-time parts
-    * and the final-watermark resend.
+    * (`user_id` as a long key), filtered to `steps`: 2 event-time parts.
     */
   private def stepEvents(s: SparkSession, d: String, steps: Column): Replay.Chunks =
-    Replay.parts(nfaInput(s, d).where(steps), 2, "ts").flushed
+    Replay.parts(nfaInput(s, d).where(steps), 2, "ts")
 
   /** Every event, 2 event-time parts: the NFA fixtures keep breakers in
-    * state and emit on their timers, so no resend is needed.
+    * state and emit on their timers.
     */
   private def nfaEvents(s: SparkSession, d: String): Replay.Chunks =
     Replay.parts(nfaInput(s, d), 2, "ts")

@@ -669,7 +669,7 @@ object ReferenceQueries {
   val qStreamSession = Fixture(
     "q_stream_session_window",
     (s, d) => Replay(s, Replay.parts(
-        Tables.events(s, d).select("ts", "user_id", "value"), 2, "ts").flushed,
+        Tables.events(s, d).select("ts", "user_id", "value"), 2, "ts"),
         "stream_session") { stream =>
       stream.withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
@@ -704,15 +704,13 @@ object ReferenceQueries {
     * at sf0.001 the part table covers only a prefix of the ad domain, and
     * ad ids correlate with time, so the raw-view max overshoots the
     * watermark and predicts one extra window). The replay carries view rows
-    * only (the stream-side filter stays, as a pipeline-shape no-op); the
-    * final-watermark resend row is the last view row, which applies the
-    * final eviction whenever it joins and is harmlessly dropped when not.
+    * only (the stream-side filter stays, as a pipeline-shape no-op).
     */
   val qStreamYsb = Fixture(
     "q_stream_ysb_pipeline",
     (s, d) => Replay(s, Replay.parts(Tables.events(s, d)
         .where(col("event_type") === "view")
-        .select("ts", "event_type", "event_id"), 2, "ts").flushed, "stream_ysb") { views =>
+        .select("ts", "event_type", "event_id"), 2, "ts"), "stream_ysb") { views =>
       val stream = views.filter(col("event_type") === "view")
         .select(col("ts"), expr("unix_micros(ts) div 1000000").as("es"),
           pmod(col("event_id"), lit(1000)).as("ad_id"))
@@ -782,12 +780,11 @@ object ReferenceQueries {
     * LongLong → Long where values fit; this pins the wide path.
     */
   /** The `events` columns the windowed stream fixtures read, replayed by
-    * [[graft.streaming.Replay]] in event-time order: 2 parts and the
-    * final-watermark resend.
+    * [[graft.streaming.Replay]] in event-time order, in 2 parts.
     */
   private def eventChunks(s: SparkSession, d: String): Replay.Chunks =
     Replay.parts(Tables.events(s, d).select(col("ts"), col("event_type"),
-      col("value"), col("user_id").cast("long").as("user_id")), 2, "ts").flushed
+      col("value"), col("user_id").cast("long").as("user_id")), 2, "ts")
 
   /** The PRODUCTION streaming path — append mode + watermark — under the
     * batch oracle: tumbling 1 h windows keyed by event_type, CNT + SUM,
@@ -962,7 +959,7 @@ object ReferenceQueries {
         .select(col("event_type"),
           graft.operators.TimeWindows.epochSeconds(col("ts")).as("es"),
           col("value"), col("ts"))
-      val out = Replay(s, Replay.parts(src, 4, "ts").flushed, "stream_gap") { stream =>
+      val out = Replay(s, Replay.parts(src, 4, "ts"), "stream_gap") { stream =>
         graft.streaming.StreamingGapFill
           .tumblingWithBubbles(s, stream, 3600, watermarkDelaySec = 0L)
           .select(col("event_type"), col("ws"), col("cnt"),
@@ -1174,7 +1171,7 @@ object ReferenceQueries {
   val qStreamHotItems = Fixture(
     "q_stream_hot_items",
     (s, d) => Replay(s, Replay.parts(Tables.events(s, d).select("ts", "event_id"),
-        2, "ts", "event_id").flushed, "stream_hot") { events =>
+        2, "ts", "event_id"), "stream_hot") { events =>
       val stream = events
         .select(col("ts"), pmod(col("event_id"), lit(4)).as("auction"))
         .withWatermark("ts", "0 seconds")
@@ -1286,10 +1283,8 @@ object ReferenceQueries {
 
   /** [[qStreamKmvDistinct]] replayed from a FILE source
     * (streaming/FileReplay — mtime-ordered contiguous-range staging,
-    * maxFilesPerTrigger as the chunking, the re-delivered tail row
-    * applying the final watermark exactly like the replayed twin's resend
-    * (`Replay.Chunks.flushed`); the duplicate lands in the never-emitted
-    * last window, so the oracle is shared verbatim). Real scan splits feed the
+    * maxFilesPerTrigger as the chunking, the oracle shared verbatim with
+    * the replayed twin). Real scan splits feed the
     * sketch state in parallel, so the sf1 smoke measures the O(k)-per-
     * window aggregate, not the single-threaded driver feed.
     */
@@ -1302,8 +1297,7 @@ object ReferenceQueries {
           col("es"), col("user_id").cast("long").as("user_id"))
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_kmv_${Integer.toHexString(d.hashCode)}").getAbsolutePath
-      graft.streaming.FileReplay.stageOrdered(ev, dir, "ord", 32,
-        tail = Some(ev.orderBy(col("ord").desc).limit(1)))
+      graft.streaming.FileReplay.stageOrdered(ev, dir, "ord", 32)
       val out = s.readStream
         .schema("ord LONG, es LONG, user_id LONG")
         .option("maxFilesPerTrigger", "16")

@@ -30,16 +30,10 @@ import scala.jdk.CollectionConverters._
 object FileReplay {
 
   /** Write `df` into `nFiles` ascending-`orderCol` parquet files under
-    * `dir` (replaced if present), mtime-staggered in range order. With
-    * `tail`, one extra file is staged LAST — a final micro-batch of its
-    * own whose only job is making the source apply the last data batch's
-    * watermark (watermark updates lag one micro-batch; a [[Replay]] does
-    * this with [[Replay.Chunks.flushed]], a resend of an already-seen
-    * row).
+    * `dir` (replaced if present), mtime-staggered in range order.
     * Returns `dir`.
     */
-  def stageOrdered(df: DataFrame, dir: String, orderCol: String,
-      nFiles: Int, tail: Option[DataFrame] = None): String = {
+  def stageOrdered(df: DataFrame, dir: String, orderCol: String, nFiles: Int): String = {
     require(nFiles >= 1, s"nFiles must be >= 1 (got $nFiles)")
     // Idempotence: staging is harness cost, and a bench loop re-running
     // the same fixture would otherwise pay the full write on every
@@ -48,7 +42,7 @@ object FileReplay {
     // are immutable per sfDir (the ScaleSmoke _SMOKE_READY precedent).
     // schema in the recipe: a fixture that later changes its projection
     // must invalidate any stale staging left by the old code
-    val recipe = s"$orderCol/$nFiles/${tail.isDefined}/${df.schema.catalogString}"
+    val recipe = s"$orderCol/$nFiles/${df.schema.catalogString}"
     val marker = Paths.get(dir, "_REPLAY_READY")
     if (Files.exists(marker) &&
         new String(Files.readAllBytes(marker), "UTF-8") == recipe)
@@ -57,16 +51,9 @@ object FileReplay {
       .sortWithinPartitions(orderCol)
       .write.mode("overwrite").parquet(dir)
     val parts = partFiles(dir)
-    tail.foreach { t =>
-      val tmp = s"$dir/_tail_stage"
-      t.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = partFiles(tmp).head
-      Files.move(src, Paths.get(dir, "part-zz-tail.parquet"))
-      deleteRecursively(Paths.get(tmp))
-    }
-    // stamp AFTER all files exist: name order == range order == replay order
+    // name order == range order == replay order
     val base = 1_000_000_000_000L // fixed epoch: runs must not race wall time
-    partFiles(dir).zipWithIndex.foreach { case (p, i) =>
+    parts.zipWithIndex.foreach { case (p, i) =>
       Files.setLastModifiedTime(p, FileTime.fromMillis(base + i * 1000L))
     }
     require(parts.size == nFiles,

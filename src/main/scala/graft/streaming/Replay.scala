@@ -19,11 +19,18 @@ import scala.jdk.CollectionConverters._
   * assumes in-order input, which is what [[parts]] replays.
   *
   * Every replay runs in one posture: [[Streams.withRocksDb]] (RocksDB state,
-  * which `transformWithState` requires) and 4 shuffle partitions. State
-  * partitioning is fixed at a query's first run, and every stateful
-  * operator writes state files per partition per trigger, so 32
-  * partitions on a replay this size is checkpoint I/O and nothing else
-  * (measured 16 s → ~5 s for a chained paned fixture at sf0.1).
+  * which `transformWithState` requires), 4 shuffle partitions and no-data
+  * triggers on. State partitioning is fixed at a query's first run, and
+  * every stateful operator writes state files per partition per trigger,
+  * so 32 partitions on a replay this size is checkpoint I/O and nothing
+  * else (measured 16 s → ~5 s for a chained paned fixture at sf0.1).
+  *
+  * The final watermark needs no extra input: the watermark (max event
+  * time − delay) is computed at the end of a trigger and applied by the
+  * next one, and with `spark.sql.streaming.noDataMicroBatches.enabled` on
+  * (Spark's default, which the posture sets even where a session turned
+  * it off) the query runs that next trigger without data before
+  * `processAllAvailable` returns.
   */
 object Replay {
 
@@ -31,19 +38,6 @@ object Replay {
     * rows per trigger, in replay order.
     */
   final case class Chunks(schema: StructType, triggers: Seq[Seq[Row]]) {
-
-    /** One more trigger that re-sends the last row, so that the final
-      * watermark is applied. The watermark (max event time − delay) is
-      * computed at the end of a trigger and applied by the next one; a
-      * no-data trigger normally does that
-      * (`spark.sql.streaming.noDataMicroBatches.enabled`), and the resend
-      * does it regardless of that conf. The row lands in the last, still
-      * open window, which is never emitted, so it cannot change the output
-      * of an append-mode window. Where only some rows advance the watermark
-      * (a filter below it), build the input from those rows.
-      */
-    def flushed: Chunks =
-      triggers.flatten.lastOption.fold(this)(r => copy(triggers = triggers :+ Seq(r)))
 
     /** The last trigger's rows as a DataFrame, to replay that trigger after
       * a simulated crash.
@@ -136,7 +130,8 @@ object Replay {
     */
   private def run(s: SparkSession, start: => StreamingQuery, feeds: Seq[() => Unit]): Unit =
     Streams.withRocksDb(s) {
-      Streams.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+      Streams.withConf(s, "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
         val q = start
         try
           if (feeds.isEmpty) q.processAllAvailable()

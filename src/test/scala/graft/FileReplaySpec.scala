@@ -8,7 +8,7 @@ import graft.streaming.FileReplay
 
 /** The file-source replay stager: contiguous ascending ranges, mtime
   * ordering that matches name ordering (what FileStreamSource sorts by),
-  * the tail file listed last, and staging idempotence via the recipe
+  * and staging idempotence via the recipe
   * marker. The streaming fixtures prove the stager end-to-end under
   * oracles; this pins the mechanics directly.
   */
@@ -48,31 +48,24 @@ class FileReplaySpec extends SparkTestBase {
     assert(spark.read.parquet(dir).count() == 100)
   }
 
-  test("tail file is staged last and the marker makes staging idempotent") {
-    import spark.implicits._
-    val dir = freshDir("replay_tail")
-    FileReplay.stageOrdered(ids(40), dir, "id", 4,
-      tail = Some(Seq((39L, "v39")).toDF("id", "v")))
+  test("the marker makes staging idempotent; a changed recipe re-stages") {
+    val dir = freshDir("replay_marker")
+    FileReplay.stageOrdered(ids(40), dir, "id", 4)
     val all = Files.list(Paths.get(dir)).iterator()
     val parts = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     all.forEachRemaining(p =>
       if (p.getFileName.toString.startsWith("part-")) parts += p)
-    assert(parts.size == 5, s"4 range files + 1 tail, got ${parts.size}")
-    val byTime = parts.sortBy(Files.getLastModifiedTime(_).toMillis)
-    assert(byTime.last.getFileName.toString.contains("tail"),
-      s"tail must list last by mtime: ${byTime.map(_.getFileName)}")
+    assert(parts.size == 4, s"4 range files, got ${parts.size}")
 
     // idempotence: a second call with the same recipe rewrites nothing
     val stamps = parts.map(p => p -> Files.getLastModifiedTime(p)).toMap
-    FileReplay.stageOrdered(ids(40), dir, "id", 4,
-      tail = Some(Seq((39L, "v39")).toDF("id", "v")))
+    FileReplay.stageOrdered(ids(40), dir, "id", 4)
     stamps.foreach { case (p, t) =>
       assert(Files.getLastModifiedTime(p) == t, s"$p was re-staged")
     }
 
     // a different recipe (schema change) DOES re-stage
-    FileReplay.stageOrdered(ids(40).withColumn("extra", lit(1)), dir, "id", 4,
-      tail = Some(Seq((39L, "v39", 1)).toDF("id", "v", "extra")))
+    FileReplay.stageOrdered(ids(40).withColumn("extra", lit(1)), dir, "id", 4)
     assert(spark.read.parquet(dir).columns.contains("extra"),
       "changed recipe must invalidate stale staging")
   }

@@ -1,24 +1,19 @@
 package graft
 
+import scala.io.Source
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.plans.{MvRewrite, MvRegistry}
 import graft.plans.MvRegistry.AggDef
+import graft.plans.MvRewrite.scanRoots
 
 /** Materialized-view rewrite (plans/MvRewrite.scala): exact-key projection,
   * subset-key rollup re-aggregation, conservative misses, exprId
-  * preservation under downstream operators, and deregistration.
+  * preservation under downstream operators, deregistration, and the
+  * [[MvRewrite.serving]] scope every served query runs in.
   */
 class MvRewriteSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten
 
   private def withMv[T](body: (String, org.apache.spark.sql.DataFrame) => T): T = {
     val baseDir = freshDir("mv_base")
@@ -31,25 +26,20 @@ class MvRewriteSpec extends SparkTestBase {
         sum(col("v")).as("sum_v"), min(col("v")).as("min_v"),
         max(col("v")).as("max_v"))
       .write.parquet(mvDir)
-    MvRegistry.register(spark, s"mv_$baseDir", baseDir, Seq("g1", "g2"),
-      Seq(AggDef("cnt", "count", None), AggDef("cnt_v", "count", Some("v")),
-        AggDef("sum_v", "sum", Some("v")),
-        AggDef("min_v", "min", Some("v")), AggDef("max_v", "max", Some("v"))),
-      mvDir)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try body(mvDir, base)
-    finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister(s"mv_$baseDir")
-    }
+    MvRewrite.serving(spark, s"mv_$baseDir") {
+      MvRegistry.register(spark, s"mv_$baseDir", baseDir, Seq("g1", "g2"),
+        Seq(AggDef("cnt", "count", None), AggDef("cnt_v", "count", Some("v")),
+          AggDef("sum_v", "sum", Some("v")),
+          AggDef("min_v", "min", Some("v")), AggDef("max_v", "max", Some("v"))),
+        mvDir)
+    }(body(mvDir, base))
   }
 
   test("exact key set rewrites to a projection over the MV scan") {
     withMv { (mvDir, base) =>
       val q = base.groupBy("g1", "g2").agg(sum(col("v")).as("s"),
         count(lit(1)).as("n"))
-      val paths = scanPaths(q)
+      val paths = scanRoots(q)
       assert(paths.exists(_.contains(mvDir)), paths.mkString(","))
       assert(!paths.exists(_.contains("mv_base")), "base still scanned")
       // semantics unchanged vs an un-rewritten computation
@@ -65,7 +55,7 @@ class MvRewriteSpec extends SparkTestBase {
     withMv { (mvDir, base) =>
       val q = base.groupBy("g1").agg(count(lit(1)).as("n"),
         sum(col("v")).as("s"), min(col("v")).as("lo"), max(col("v")).as("hi"))
-      assert(scanPaths(q).forall(_.contains(mvDir)))
+      assert(scanRoots(q).forall(_.contains(mvDir)))
       val got = q.collect().map(r =>
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
       val rows = base.collect().groupBy(_.getString(0))
@@ -79,14 +69,14 @@ class MvRewriteSpec extends SparkTestBase {
   test("avg derives from stored sum / count(v), both arms, value-exact") {
     withMv { (mvDir, base) =>
       val q = base.groupBy("g1").agg(avg(col("v")).as("a"))
-      assert(scanPaths(q).forall(_.contains(mvDir)))
+      assert(scanRoots(q).forall(_.contains(mvDir)))
       val got = q.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       base.collect().groupBy(_.getString(0)).foreach { case (g, rs) =>
         val vs = rs.map(_.getLong(2))
         assert(got(g) == vs.sum.toDouble / vs.size, g)
       }
       val exactArm = base.groupBy("g1", "g2").agg(avg(col("v")).as("a"))
-      assert(scanPaths(exactArm).forall(_.contains(mvDir)))
+      assert(scanRoots(exactArm).forall(_.contains(mvDir)))
       assert(exactArm.count() == 15)
     }
   }
@@ -94,7 +84,7 @@ class MvRewriteSpec extends SparkTestBase {
   test("unsupported aggregates (distinct) fall through to the base") {
     withMv { (mvDir, base) =>
       val q2 = base.groupBy("g1", "g2").agg(countDistinct(col("v")).as("d"))
-      assert(!scanPaths(q2).exists(_.contains(mvDir)))
+      assert(!scanRoots(q2).exists(_.contains(mvDir)))
     }
   }
 
@@ -102,7 +92,7 @@ class MvRewriteSpec extends SparkTestBase {
     withMv { (mvDir, base) =>
       val q = base.groupBy("g1").agg(sum(col("v")).as("s"))
         .where(col("s") > 0).orderBy(col("s").desc)
-      assert(scanPaths(q).forall(_.contains(mvDir)))
+      assert(scanRoots(q).forall(_.contains(mvDir)))
       assert(q.count() == 5)
     }
   }
@@ -112,7 +102,7 @@ class MvRewriteSpec extends SparkTestBase {
       // filter below the aggregate, on grouping-key columns only
       val q = base.where(col("g1") === "g1" || col("g2") === "h2")
         .groupBy("g1").agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      val paths = scanPaths(q)
+      val paths = scanRoots(q)
       assert(paths.exists(_.contains(mvDir)), s"filtered agg must hit MV: $paths")
       assert(!paths.exists(_.contains("mv_base")), "base still scanned")
       val rows = base.collect()
@@ -133,7 +123,7 @@ class MvRewriteSpec extends SparkTestBase {
       val q = spark.sql(
         """SELECT g1, sum(v) AS s FROM mv_having_base
           |GROUP BY g1 HAVING count(1) > 55 AND sum(v) > 0""".stripMargin)
-      val paths = scanPaths(q)
+      val paths = scanRoots(q)
       assert(paths.exists(_.contains(mvDir)), s"HAVING agg must hit MV: $paths")
       val expect = base.collect().groupBy(_.getString(0))
         .filter { case (_, rs) => rs.size > 55 }
@@ -147,13 +137,13 @@ class MvRewriteSpec extends SparkTestBase {
     withMv { (mvDir, base) =>
       val onMeasure = base.where(col("v") > 100L).groupBy("g1")
         .agg(sum(col("v")).as("s"))
-      assert(!scanPaths(onMeasure).exists(_.contains(mvDir)),
+      assert(!scanRoots(onMeasure).exists(_.contains(mvDir)),
         "a measure predicate does NOT commute with the rollup")
       // NB: a tautological rand predicate (rand > -1) gets range-folded to
       // true by the optimizer and legitimately rewrites; this one can't fold
       val nondet = base.where(rand(7) > 0.0001 && col("g1") === "g1")
         .groupBy("g1").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(nondet).exists(_.contains(mvDir)),
+      assert(!scanRoots(nondet).exists(_.contains(mvDir)),
         "nondeterministic predicates must not be re-evaluated group-side")
     }
   }
@@ -170,23 +160,19 @@ class MvRewriteSpec extends SparkTestBase {
       .write.parquet(wholeDir)
     spark.read.parquet(salesDir).groupBy("g1")
       .agg(sum(col("v")).as("sum_v")).write.parquet(mvDir)
-    MvRegistry.register(spark, "mv_anchor", "sales", Seq("g1"),
-      Seq(AggDef("sum_v", "sum", Some("v"))), mvDir)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_anchor") {
+      MvRegistry.register(spark, "mv_anchor", "sales", Seq("g1"),
+        Seq(AggDef("sum_v", "sum", Some("v"))), mvDir)
+    } {
       val hit = spark.read.parquet(salesDir).groupBy("g1")
         .agg(sum(col("v")).as("s"))
-      assert(scanPaths(hit).exists(_.contains(mvDir)), "anchored tail must still hit")
+      assert(scanRoots(hit).exists(_.contains(mvDir)), "anchored tail must still hit")
       val miss = spark.read.parquet(wholeDir).groupBy("g1")
         .agg(sum(col("v")).as("s"))
-      val paths = scanPaths(miss)
+      val paths = scanRoots(miss)
       assert(!paths.exists(_.contains(mvDir)),
         s"unanchored suffix rewrote whole_sales to the MV: $paths")
       assert(miss.agg(sum(col("s"))).head.getLong(0) == (1 to 50).map(_ * 1000L).sum)
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_anchor")
     }
   }
 
@@ -200,14 +186,13 @@ class MvRewriteSpec extends SparkTestBase {
     val root = s"$parent/store"
     SnapshotLake.commit(base.groupBy("g1")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v")), root, 0L)
-    MvRegistry.register(spark, "mv_ver", baseDir, Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_ver") {
+      MvRegistry.register(spark, "mv_ver", baseDir, Seq("g1"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
+    } {
       def q = base.groupBy("g1").agg(sum(col("v")).as("s"))
       val v0 = q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(scanPaths(q).exists(_.contains("/v0")), "v0 must serve first")
+      assert(scanRoots(q).exists(_.contains("/v0")), "v0 must serve first")
       // refresh: commit v1 with every stored sum shifted — if the old
       // registered relation were still serving, the shift would be invisible
       SnapshotLake.commit(
@@ -217,16 +202,12 @@ class MvRewriteSpec extends SparkTestBase {
       v0.foreach { case (g, s0) =>
         assert(after(g) == s0 + 1000L, s"group $g not served from v1")
       }
-      assert(scanPaths(q).exists(_.stripSuffix("/").endsWith("/v1")),
-        s"plan must read the v1 directory: ${scanPaths(q)}")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_ver")
+      assert(scanRoots(q).exists(_.stripSuffix("/").endsWith("/v1")),
+        s"plan must read the v1 directory: ${scanRoots(q)}")
     }
   }
 
-  test("PaneRewrite + MvRewrite coexist: each aggregate picks exactly one rewrite") {
-    import graft.plans.PaneRewrite
+  test("a sliding window() aggregate is not served from the MV; a plain rollup is") {
     val parent = freshDir("mv_coex")
     val baseDir = s"$parent/base"
     (1 to 600).map(i => (s"g${i % 3}", i.toLong,
@@ -236,39 +217,31 @@ class MvRewriteSpec extends SparkTestBase {
     val mvDir = s"$parent/mv"
     base.groupBy("g1").agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(mvDir)
-    MvRegistry.register(spark, "mv_coex", baseDir, Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), mvDir)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev ++ Seq(PaneRewrite(2), MvRewrite())
-    try {
-      // sliding-window aggregate over the MV-registered base: the PANE
-      // rewrite fires (window grouping key is not a plain column, so the
-      // MV matcher must not claim it) and the MV scan stays out of the plan
+    MvRewrite.serving(spark, "mv_coex") {
+      MvRegistry.register(spark, "mv_coex", baseDir, Seq("g1"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), mvDir)
+    } {
+      // sliding-window aggregate over the MV-registered base: the window
+      // grouping key is not a plain column, so the MV matcher must not
+      // claim it, and the plan still reads the base
       val slide = base
         .groupBy(window(col("ts"), "120 seconds", "60 seconds"), col("g1"))
         .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
         .select(col("window.start").cast("long").as("ws"), col("g1"),
           col("cnt"), col("sum_v"))
-      val slideTree = slide.queryExecution.optimizedPlan.treeString
-      assert(slideTree.contains("__pane"), "pane rewrite did not fire")
-      assert(!scanPaths(slide).exists(_.contains(mvDir)),
-        "MV must not claim a window-grouped aggregate")
-      // plain rollup over the same base: the MV rewrite fires and the pane
-      // machinery leaves it alone
+      val slidePaths = scanRoots(slide)
+      assert(slidePaths.exists(_.contains("/base")) && !slidePaths.exists(_.contains(mvDir)),
+        s"MV must not claim a window-grouped aggregate: $slidePaths")
+      // plain rollup over the same base: the MV rewrite fires
       val roll = base.groupBy("g1").agg(sum(col("v")).as("s"))
-      val rollTree = roll.queryExecution.optimizedPlan.treeString
-      assert(scanPaths(roll).exists(_.contains(mvDir)), "MV rewrite did not fire")
-      assert(!rollTree.contains("__pane"), "pane rewrite fired on a plain rollup")
-      // both return correct values with BOTH rules live
+      assert(scanRoots(roll).exists(_.contains(mvDir)), "MV rewrite did not fire")
+      // both return correct values with the rule live
       val expect = (1 to 600).groupBy(i => s"g${i % 3}")
         .map { case (g, is) => g -> is.map(_.toLong).sum }
       roll.collect().foreach(r => assert(r.getLong(1) == expect(r.getString(0))))
       val slideRows = slide.collect()
       assert(slideRows.map(_.getLong(2)).sum ==
         2L * 600, "each row must land in exactly 2 sliding windows")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_coex")
     }
   }
 
@@ -286,15 +259,14 @@ class MvRewriteSpec extends SparkTestBase {
     fact.join(dim, col("fk") === col("pk"))
       .groupBy("attr").agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(mvDir)
-    MvRegistry.registerJoin(spark, "mv_join", factDir, dimDir, "fk", "pk",
-      Seq("attr"), Seq(AggDef("cnt", "count", None),
-        AggDef("sum_v", "sum", Some("v"))), mvDir)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_join") {
+      MvRegistry.registerJoin(spark, "mv_join", factDir, dimDir, "fk", "pk",
+        Seq("attr"), Seq(AggDef("cnt", "count", None),
+          AggDef("sum_v", "sum", Some("v"))), mvDir)
+    } {
       val q = fact.join(dim, col("fk") === col("pk"))
         .groupBy("attr").agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      val paths = scanPaths(q)
+      val paths = scanRoots(q)
       assert(paths.exists(_.contains(mvDir)), s"join rollup must hit MV: $paths")
       assert(!paths.exists(p => p.contains("/fact") || p.contains("/dim")),
         s"fact/dim still scanned: $paths")
@@ -312,27 +284,24 @@ class MvRewriteSpec extends SparkTestBase {
       val qf = fact.join(dim, col("fk") === col("pk"))
         .where(col("attr") === "a1")
         .groupBy("attr").agg(sum(col("v")).as("s"))
-      assert(scanPaths(qf).exists(_.contains(mvDir)), "key-filtered join must hit")
+      assert(scanRoots(qf).exists(_.contains(mvDir)), "key-filtered join must hit")
       assert(qf.collect().map(r => r.getLong(1)).toSeq ==
         Seq(expect("a1")._1))
       // a plain FACT aggregate must never be claimed by the join MV (the
       // dim join can drop or multiply fact rows)
       val qp = fact.agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qp).exists(_.contains(mvDir)),
+      assert(!scanRoots(qp).exists(_.contains(mvDir)),
         "join MV claimed a plain fact scan")
       // a measure filter under the join falls through
       val qm = fact.where(col("v") > 100L).join(dim, col("fk") === col("pk"))
         .groupBy("attr").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qm).exists(_.contains(mvDir)),
+      assert(!scanRoots(qm).exists(_.contains(mvDir)),
         "measure-filtered join must fall through")
       // a different join condition falls through
       val qc = fact.join(dim, col("fk") === col("pk") + 1L)
         .groupBy("attr").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qc).exists(_.contains(mvDir)),
+      assert(!scanRoots(qc).exists(_.contains(mvDir)),
         "non-matching join condition must fall through")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_join")
     }
   }
 
@@ -350,26 +319,22 @@ class MvRewriteSpec extends SparkTestBase {
     SnapshotLake.commit(fact.join(dim, col("fk") === col("pk"))
       .groupBy("attr").agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v")),
       root, 0L)
-    MvRegistry.registerJoin(spark, "mv_jver", s"$parent/fact", s"$parent/dim",
-      "fk", "pk", Seq("attr"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_jver") {
+      MvRegistry.registerJoin(spark, "mv_jver", s"$parent/fact", s"$parent/dim",
+        "fk", "pk", Seq("attr"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
+    } {
       def q = fact.join(dim, col("fk") === col("pk"))
         .groupBy("attr").agg(sum(col("v")).as("s"))
       val v0 = q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(scanPaths(q).exists(_.stripSuffix("/").endsWith("/v0")))
+      assert(scanRoots(q).exists(_.stripSuffix("/").endsWith("/v0")))
       SnapshotLake.commit(
         spark.read.parquet(SnapshotLake.versionPath(root, 0L))
           .withColumn("sum_v", col("sum_v") + 500L), root, 1L)
       val v1 = q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       v0.foreach { case (a, s0) => assert(v1(a) == s0 + 500L, a) }
-      assert(scanPaths(q).exists(_.stripSuffix("/").endsWith("/v1")),
-        s"join view must serve the refreshed version: ${scanPaths(q)}")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_jver")
+      assert(scanRoots(q).exists(_.stripSuffix("/").endsWith("/v1")),
+        s"join view must serve the refreshed version: ${scanRoots(q)}")
     }
   }
 
@@ -391,17 +356,16 @@ class MvRewriteSpec extends SparkTestBase {
     joined.groupBy("seg")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(s"$parent/mv")
-    MvRegistry.registerSnowflake(spark, "mv_snow", s"$parent/fact",
-      Seq(s"$parent/mid" -> Seq("fk" -> "pk"),
-        s"$parent/cust" -> Seq("ck" -> "cid")),
-      Seq("seg"), Seq(AggDef("cnt", "count", None),
-        AggDef("sum_v", "sum", Some("v"))), s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_snow") {
+      MvRegistry.registerSnowflake(spark, "mv_snow", s"$parent/fact",
+        Seq(s"$parent/mid" -> Seq("fk" -> "pk"),
+          s"$parent/cust" -> Seq("ck" -> "cid")),
+        Seq("seg"), Seq(AggDef("cnt", "count", None),
+          AggDef("sum_v", "sum", Some("v"))), s"$parent/mv")
+    } {
       val q = joined.groupBy("seg")
         .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      val paths = scanPaths(q)
+      val paths = scanRoots(q)
       assert(paths.exists(_.contains("/mv")), s"snowflake must hit MV: $paths")
       assert(!paths.exists(p => p.contains("/fact") || p.contains("/mid") ||
         p.contains("/cust")), s"base tables still scanned: $paths")
@@ -412,8 +376,8 @@ class MvRewriteSpec extends SparkTestBase {
       val q2 = mid.join(cust, col("ck") === col("cid"))
         .join(fact, col("fk") === col("pk"))
         .groupBy("seg").agg(sum(col("v")).as("s"))
-      assert(scanPaths(q2).exists(_.contains("/mv")),
-        s"bushy/reordered join must also hit: ${scanPaths(q2)}")
+      assert(scanRoots(q2).exists(_.contains("/mv")),
+        s"bushy/reordered join must also hit: ${scanRoots(q2)}")
       // values against a hand rollup
       val expect = (1 to 400).groupBy(i => s"seg${((i % 20) % 6) % 3}")
         .map { case (g, is) => g -> ((is.map(_.toLong).sum, is.size.toLong)) }
@@ -424,17 +388,14 @@ class MvRewriteSpec extends SparkTestBase {
       // can drop rows, so serving it from the 3-way MV would be wrong
       val qp = fact.join(mid, col("fk") === col("pk"))
         .groupBy("ck").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qp).exists(_.contains("/mv")),
+      assert(!scanRoots(qp).exists(_.contains("/mv")),
         "partial chain must not be served")
       // EXTRA equi-condition (different join semantics) falls through
       val qe = fact.join(mid, col("fk") === col("pk"))
         .join(cust, col("ck") === col("cid") && col("fk") === col("cid"))
         .groupBy("seg").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qe).exists(_.contains("/mv")),
+      assert(!scanRoots(qe).exists(_.contains("/mv")),
         "extra join condition must not be served")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_snow")
     }
   }
 
@@ -452,27 +413,23 @@ class MvRewriteSpec extends SparkTestBase {
     joined.groupBy("attr")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(s"$parent/mv")
-    MvRegistry.registerSnowflake(spark, "mv_comp", s"$parent/fact",
-      Seq(s"$parent/dim" -> Seq("fk1" -> "pk1", "fk2" -> "pk2")),
-      Seq("attr"), Seq(AggDef("cnt", "count", None),
-        AggDef("sum_v", "sum", Some("v"))), s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_comp") {
+      MvRegistry.registerSnowflake(spark, "mv_comp", s"$parent/fact",
+        Seq(s"$parent/dim" -> Seq("fk1" -> "pk1", "fk2" -> "pk2")),
+        Seq("attr"), Seq(AggDef("cnt", "count", None),
+          AggDef("sum_v", "sum", Some("v"))), s"$parent/mv")
+    } {
       val q = joined.groupBy("attr").agg(sum(col("v")).as("s"))
-      assert(scanPaths(q).exists(_.contains("/mv")),
-        s"composite-key join must hit: ${scanPaths(q)}")
+      assert(scanRoots(q).exists(_.contains("/mv")),
+        s"composite-key join must hit: ${scanRoots(q)}")
       val expect = (1 to 300).groupBy(i => s"g${(i % 10 + i % 4) % 5}")
         .map { case (g, is) => g -> is.map(_.toLong).sum }
       q.collect().foreach(r => assert(r.getLong(1) == expect(r.getString(0))))
       // HALF the composite key is a DIFFERENT join — must fall through
       val qh = fact.join(dim, col("fk1") === col("pk1"))
         .groupBy("attr").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qh).exists(_.contains("/mv")),
+      assert(!scanRoots(qh).exists(_.contains("/mv")),
         "half of a composite key must not be served")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_comp")
     }
   }
 
@@ -485,32 +442,28 @@ class MvRewriteSpec extends SparkTestBase {
     base.groupBy("g1").agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(s"$parent/mv")
     // registered by TABLE NAME, not path — both spellings must serve
-    MvRegistry.register(spark, "mv_cat", tblName, Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))),
-      s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_cat") {
+      MvRegistry.register(spark, "mv_cat", tblName, Seq("g1"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))),
+        s"$parent/mv")
+    } {
       val q = spark.table(tblName).groupBy("g1").agg(sum(col("v")).as("s"))
-      assert(scanPaths(q).exists(_.contains("/mv")),
-        s"catalog-table query must hit the MV: ${scanPaths(q)}")
+      assert(scanRoots(q).exists(_.contains("/mv")),
+        s"catalog-table query must hit the MV: ${scanRoots(q)}")
       val expect = (1 to 200).groupBy(i => s"g${i % 4}")
         .map { case (g, is) => g -> is.map(_.toLong).sum }
       q.collect().foreach(r => assert(r.getLong(1) == expect(r.getString(0))))
       // SQL spelling over the catalog table serves too
       val qs = spark.sql(s"SELECT g1, sum(v) AS s FROM $tblName GROUP BY g1")
-      assert(scanPaths(qs).exists(_.contains("/mv")),
-        s"SQL catalog query must hit the MV: ${scanPaths(qs)}")
+      assert(scanRoots(qs).exists(_.contains("/mv")),
+        s"SQL catalog query must hit the MV: ${scanRoots(qs)}")
       // an unrelated catalog table never matches
       val otherName = s"${tblName}_other"
       (1 to 10).map(i => (s"g${i % 4}", i.toLong * 100)).toDF("g1", "v")
         .write.option("path", s"$parent/other").saveAsTable(otherName)
       val qo = spark.table(otherName).groupBy("g1").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qo).exists(_.contains("/mv")),
+      assert(!scanRoots(qo).exists(_.contains("/mv")),
         "a different catalog table must not be claimed")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_cat")
     }
   }
 
@@ -530,30 +483,25 @@ class MvRewriteSpec extends SparkTestBase {
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
       .write.parquet(s"$parent/mv")
     // registered BARE while `default` is current → pinned to default.<tbl>
-    MvRegistry.register(spark, "mv_cat_db", tblName, Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))),
-      s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    try MvRewrite.serving(spark, "mv_cat_db") {
+      MvRegistry.register(spark, "mv_cat_db", tblName, Seq("g1"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))),
+        s"$parent/mv")
+    } {
       // same database: serves
       val q = spark.table(tblName).groupBy("g1").agg(sum(col("v")).as("s"))
-      assert(scanPaths(q).exists(_.contains("/mv")),
-        s"same-db catalog query must hit the MV: ${scanPaths(q)}")
+      assert(scanRoots(q).exists(_.contains("/mv")),
+        s"same-db catalog query must hit the MV: ${scanRoots(q)}")
       // other database, same bare name: MUST run against its own data
       val qo = spark.table(s"$db.$tblName")
         .groupBy("g1").agg(sum(col("v")).as("s"))
-      assert(!scanPaths(qo).exists(_.contains("/mv")),
-        s"cross-database table was claimed by the MV: ${scanPaths(qo)}")
+      assert(!scanRoots(qo).exists(_.contains("/mv")),
+        s"cross-database table was claimed by the MV: ${scanRoots(qo)}")
       val got = qo.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val expect = (1 to 10).groupBy(i => s"g${i % 4}")
         .map { case (g, is) => g -> is.map(_.toLong * 1000).sum }
       assert(got == expect, s"cross-db query served wrong data: $got")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_cat_db")
-      spark.sql(s"DROP DATABASE $db CASCADE")
-    }
+    } finally spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
   test("quantile store serves bottom-k sketch aggregates: exact keys " +
@@ -568,11 +516,10 @@ class MvRewriteSpec extends SparkTestBase {
     val raw = spark.read.parquet(s"$parent/base")
     QuantileSketch.sketch(raw, Seq("g1", "sub"), col("id"), col("v"), k)
       .write.parquet(s"$parent/mv")
-    MvRegistry.registerQuantile(spark, "mv_qsk", "base", Seq("g1", "sub"),
-      "id", "v", k, s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_qsk") {
+      MvRegistry.registerQuantile(spark, "mv_qsk", "base", Seq("g1", "sub"),
+        "id", "v", k, s"$parent/mv")
+    } {
       def skAgg(kk: Int) = QuantileSketch.bottomK(
         TextFunctions.hash64(col("id")), col("v"), kk)
       // exact keys: projection from the store, p50 estimate around the
@@ -580,28 +527,25 @@ class MvRewriteSpec extends SparkTestBase {
       val exact = raw.groupBy("g1", "sub").agg(skAgg(k).as("qsk"))
         .select(col("g1"), col("sub"),
           QuantileSketch.quantile(col("qsk"), 0.5).as("p50"))
-      assert(scanPaths(exact).exists(_.contains("/mv")) &&
-        !scanPaths(exact).exists(_.contains("/base")),
-        s"exact-key sketch query must serve from the store: ${scanPaths(exact)}")
+      assert(scanRoots(exact).exists(_.contains("/mv")) &&
+        !scanRoots(exact).exists(_.contains("/base")),
+        s"exact-key sketch query must serve from the store: ${scanRoots(exact)}")
       // subset key: rollup merge — result equals the direct coarse sketch
       val rolled = raw.groupBy("g1").agg(skAgg(k).as("qsk"))
-      assert(scanPaths(rolled).exists(_.contains("/mv")),
-        s"subset-key sketch query must merge from the store: ${scanPaths(rolled)}")
+      assert(scanRoots(rolled).exists(_.contains("/mv")),
+        s"subset-key sketch query must merge from the store: ${scanRoots(rolled)}")
       val direct = QuantileSketch.sketch(raw, Seq("g1"),
         col("id"), col("v"), k)
       assertSameRows(rolled, direct)
       // wrong k: a DIFFERENT sketch — must fall through to the base
       val wrongK = raw.groupBy("g1", "sub").agg(skAgg(16).as("qsk"))
-      assert(!scanPaths(wrongK).exists(_.contains("/mv")),
+      assert(!scanRoots(wrongK).exists(_.contains("/mv")),
         "a different-k sketch must not serve from the store")
       // wrong value column: must fall through
       val wrongV = raw.groupBy("g1", "sub").agg(QuantileSketch.bottomK(
         TextFunctions.hash64(col("id")), col("id").cast("double"), k).as("qsk"))
-      assert(!scanPaths(wrongV).exists(_.contains("/mv")),
+      assert(!scanRoots(wrongV).exists(_.contains("/mv")),
         "a different value column must not serve from the store")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_qsk")
     }
   }
 
@@ -614,49 +558,44 @@ class MvRewriteSpec extends SparkTestBase {
     val k = 16
     graft.operators.Ivm.viewKmv(base, Seq("g1"), "s", k)
       .write.parquet(s"$parent/store")
-    MvRegistry.registerKmv(spark, "mv_kmv", s"$parent/base", Seq("g1"),
-      "s", k, s"$parent/store")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
-      def sketchAgg(kk: Int) = base.groupBy("g1")
-        .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), kk).as("kmv"))
+    def sketchAgg(kk: Int) = base.groupBy("g1")
+      .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), kk).as("kmv"))
+    // the direct computation, outside the scope (rule off)
+    val direct = sketchAgg(k)
+      .select(col("g1"), size(col("kmv")).as("n"),
+        Kmv.estimate(col("kmv"), k).as("est")).collect()
+      .map(r => r.getString(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
+    MvRewrite.serving(spark, "mv_kmv") {
+      MvRegistry.registerKmv(spark, "mv_kmv", s"$parent/base", Seq("g1"),
+        "s", k, s"$parent/store")
+    } {
       val q = sketchAgg(k)
         .select(col("g1"), size(col("kmv")).as("n"),
           Kmv.estimate(col("kmv"), k).as("est"))
-      assert(scanPaths(q).exists(_.contains("/store")),
-        s"sketch agg must serve from the store: ${scanPaths(q)}")
-      assert(!scanPaths(q).exists(_.contains("/base")))
-      // content identical to the direct computation (rule off)
-      spark.experimental.extraOptimizations = prev
-      val direct = sketchAgg(k)
-        .select(col("g1"), size(col("kmv")).as("n"),
-          Kmv.estimate(col("kmv"), k).as("est")).collect()
-        .map(r => r.getString(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
-      spark.experimental.extraOptimizations = prev :+ MvRewrite()
+      assert(scanRoots(q).exists(_.contains("/store")),
+        s"sketch agg must serve from the store: ${scanRoots(q)}")
+      assert(!scanRoots(q).exists(_.contains("/base")))
+      // content identical to the direct computation
       q.collect().foreach { r =>
         assert(direct(r.getString(0)) == ((r.getInt(1), r.getDouble(2))), r)
       }
       // WHERE on the grouping key commutes
       val qf = base.where(col("g1") === "g1").groupBy("g1")
         .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
-      assert(scanPaths(qf).exists(_.contains("/store")),
-        s"key-filtered sketch agg must serve: ${scanPaths(qf)}")
+      assert(scanRoots(qf).exists(_.contains("/store")),
+        s"key-filtered sketch agg must serve: ${scanRoots(qf)}")
       // guards: wrong k / different hash input / count(distinct) without
       // the opt-in all fall through to the base
-      assert(!scanPaths(sketchAgg(8)).exists(_.contains("/store")),
+      assert(!scanRoots(sketchAgg(8)).exists(_.contains("/store")),
         "a different k must fall through")
       val qh = base.groupBy("g1")
         .agg(Kmv.bottomK(TextFunctions.hash64(concat(col("s"), lit("x"))), k)
           .as("kmv"))
-      assert(!scanPaths(qh).exists(_.contains("/store")),
+      assert(!scanRoots(qh).exists(_.contains("/store")),
         "a different hashed expression must fall through")
       val qd = base.groupBy("g1").agg(countDistinct(col("s")).as("d"))
-      assert(!scanPaths(qd).exists(_.contains("/store")),
+      assert(!scanRoots(qd).exists(_.contains("/store")),
         "count(distinct) without serveExactDistinct must fall through")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_kmv")
     }
   }
 
@@ -670,29 +609,25 @@ class MvRewriteSpec extends SparkTestBase {
     val k = 32
     graft.operators.Ivm.viewKmv(base, Seq("g1"), "s", k)
       .write.parquet(s"$parent/store")
-    MvRegistry.registerKmv(spark, "mv_kmv_ex", s"$parent/base", Seq("g1"),
-      "s", k, s"$parent/store", serveExactDistinct = true)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_kmv_ex") {
+      MvRegistry.registerKmv(spark, "mv_kmv_ex", s"$parent/base", Seq("g1"),
+        "s", k, s"$parent/store", serveExactDistinct = true)
+    } {
       val q = base.groupBy("g1").agg(countDistinct(col("s")).as("d"))
-      assert(scanPaths(q).exists(_.contains("/store")),
-        s"exact-arm count(distinct) must serve: ${scanPaths(q)}")
-      assert(!scanPaths(q).exists(_.contains("/base")))
+      assert(scanRoots(q).exists(_.contains("/store")),
+        s"exact-arm count(distinct) must serve: ${scanRoots(q)}")
+      assert(!scanRoots(q).exists(_.contains("/base")))
       val expect = (1 to 400).groupBy(i => s"g${i % 4}")
         .map { case (g, is) => g -> is.map(_ % 13).distinct.size.toLong }
       q.collect().foreach(r => assert(r.getLong(1) == expect(r.getString(0)), r))
       // mixed with a non-servable aggregate → whole aggregate falls through
       val qm = base.groupBy("g1")
         .agg(countDistinct(col("s")).as("d"), max(col("s")).as("m"))
-      assert(!scanPaths(qm).exists(_.contains("/store")),
+      assert(!scanRoots(qm).exists(_.contains("/store")),
         "an unservable sibling aggregate must veto the rewrite")
       // distinct on a DIFFERENT column falls through
       val qo = base.groupBy("g1").agg(countDistinct(col("g1")).as("d"))
-      assert(!scanPaths(qo).exists(_.contains("/store")))
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_kmv_ex")
+      assert(!scanRoots(qo).exists(_.contains("/store")))
     }
   }
 
@@ -706,63 +641,52 @@ class MvRewriteSpec extends SparkTestBase {
     val k = 16
     graft.operators.Ivm.viewKmv(base, Seq("g1", "g2"), "s", k)
       .write.parquet(s"$parent/store")
-    MvRegistry.registerKmv(spark, "mv_kmv_ru", s"$parent/base",
-      Seq("g1", "g2"), "s", k, s"$parent/store", serveExactDistinct = true)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
-      def sketchBy(cols: String*) = base.groupBy(cols.map(col): _*)
-        .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
+    def sketchBy(cols: String*) = base.groupBy(cols.map(col): _*)
+      .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
+    def filtered = base.where(col("g2") === "h1").groupBy("g1")
+      .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
+    // the direct aggregates, outside the scope (rule off)
+    val direct = sketchBy("g1")
+      .select(col("g1"), col("kmv")).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    val gDirect = sketchBy().collect().head.getSeq[Long](0)
+    val fDirect = filtered
+      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    MvRewrite.serving(spark, "mv_kmv_ru") {
+      MvRegistry.registerKmv(spark, "mv_kmv_ru", s"$parent/base",
+        Seq("g1", "g2"), "s", k, s"$parent/store", serveExactDistinct = true)
+    } {
       // subset of the store keys → served by MERGING stored sketches
       val q = sketchBy("g1")
         .select(col("g1"), size(col("kmv")).as("n"),
           Kmv.estimate(col("kmv"), k).as("est"))
-      assert(scanPaths(q).exists(_.contains("/store")),
-        s"rollup sketch agg must serve from the store: ${scanPaths(q)}")
-      assert(!scanPaths(q).exists(_.contains("/base")))
+      assert(scanRoots(q).exists(_.contains("/store")),
+        s"rollup sketch agg must serve from the store: ${scanRoots(q)}")
+      assert(!scanRoots(q).exists(_.contains("/base")))
       // merged content bit-identical to the direct coarser aggregate
-      spark.experimental.extraOptimizations = prev
-      val direct = sketchBy("g1")
-        .select(col("g1"), col("kmv")).collect()
-        .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-      spark.experimental.extraOptimizations = prev :+ MvRewrite()
       val served = sketchBy("g1").select(col("g1"), col("kmv"))
-      assert(scanPaths(served).exists(_.contains("/store")))
+      assert(scanRoots(served).exists(_.contains("/store")))
       served.collect().foreach { r =>
         assert(r.getSeq[Long](1) == direct(r.getString(0)),
           s"merged sketch differs from direct for ${r.getString(0)}")
       }
       // GLOBAL rollup (no grouping keys) serves and matches
-      val g = base.agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
-      assert(scanPaths(g).exists(_.contains("/store")),
-        s"global sketch agg must serve: ${scanPaths(g)}")
-      spark.experimental.extraOptimizations = prev
-      val gDirect = base
-        .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
-        .collect().head.getSeq[Long](0)
-      spark.experimental.extraOptimizations = prev :+ MvRewrite()
+      val g = sketchBy()
+      assert(scanRoots(g).exists(_.contains("/store")),
+        s"global sketch agg must serve: ${scanRoots(g)}")
       assert(g.collect().head.getSeq[Long](0) == gDirect)
       // exact-distinct arm must NOT serve under a rollup: per-group
       // underfull does not bound the union, size(merged) could truncate
       val qd = base.groupBy("g1").agg(countDistinct(col("s")).as("d"))
-      assert(!scanPaths(qd).exists(_.contains("/store")),
+      assert(!scanRoots(qd).exists(_.contains("/store")),
         "count(distinct) under subset keys must fall through")
       // key-only WHERE on a rolled-away store key still commutes
-      val qf = base.where(col("g2") === "h1").groupBy("g1")
-        .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
-      assert(scanPaths(qf).exists(_.contains("/store")),
-        s"filtered rollup must serve: ${scanPaths(qf)}")
-      spark.experimental.extraOptimizations = prev
-      val fDirect = base.where(col("g2") === "h1").groupBy("g1")
-        .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-      spark.experimental.extraOptimizations = prev :+ MvRewrite()
+      val qf = filtered
+      assert(scanRoots(qf).exists(_.contains("/store")),
+        s"filtered rollup must serve: ${scanRoots(qf)}")
       qf.collect().foreach { r =>
         assert(r.getSeq[Long](1) == fDirect(r.getString(0)))
       }
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_kmv_ru")
     }
   }
 
@@ -777,30 +701,26 @@ class MvRewriteSpec extends SparkTestBase {
     val root = s"$parent/store"
     SnapshotLake.commit(
       graft.operators.Ivm.viewKmv(base, Seq("g1"), "s", k), root, 0L)
-    MvRegistry.registerKmv(spark, "mv_kmv_ver", s"$parent/base", Seq("g1"),
-      "s", k, root)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_kmv_ver") {
+      MvRegistry.registerKmv(spark, "mv_kmv_ver", s"$parent/base", Seq("g1"),
+        "s", k, root)
+    } {
       def q = base.groupBy("g1")
         .agg(Kmv.bottomK(TextFunctions.hash64(col("s")), k).as("kmv"))
         .select(col("g1"), size(col("kmv")).as("n"))
-      assert(scanPaths(q).exists(_.stripSuffix("/").endsWith("/v0")))
+      assert(scanRoots(q).exists(_.stripSuffix("/").endsWith("/v0")))
       val v0 = q.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
       // IVM refresh with genuinely new distincts, committed as v1
       val delta = base.limit(50).select(col("g1"), lit("I").as("op"),
         concat(col("s"), lit("_new")).as("new_v"))
       SnapshotLake.commit(graft.operators.Ivm.applyDeltaKmv(
         SnapshotLake.read(spark, root), delta, Seq("g1"), k), root, 1L)
-      assert(scanPaths(q).exists(_.stripSuffix("/").endsWith("/v1")),
-        s"must serve the refreshed v1: ${scanPaths(q)}")
+      assert(scanRoots(q).exists(_.stripSuffix("/").endsWith("/v1")),
+        s"must serve the refreshed v1: ${scanRoots(q)}")
       q.collect().foreach { r =>
         assert(r.getInt(1) >= v0(r.getString(0)),
           "refreshed sketches can only grow")
       }
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_kmv_ver")
     }
   }
 
@@ -811,8 +731,8 @@ class MvRewriteSpec extends SparkTestBase {
       // Sum(partial counts) to 0 or the rewrite silently answers NULL
       val q = base.where(col("g1") === "nope")
         .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
-      assert(scanPaths(q).exists(_.contains(mvDir)),
-        s"global agg with key filter must serve from MV: ${scanPaths(q)}")
+      assert(scanRoots(q).exists(_.contains(mvDir)),
+        s"global agg with key filter must serve from MV: ${scanRoots(q)}")
       val r = q.head
       assert(r.getLong(0) == 0L, s"count must be 0, got ${r.get(0)}")
       assert(r.isNullAt(1), "sum over empty stays NULL (matches original)")
@@ -832,14 +752,13 @@ class MvRewriteSpec extends SparkTestBase {
     SnapshotLake.commit(base.groupBy("g1")
       .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v")), root, 0L)
     val sizeBefore = MvRegistry.relCacheSize
-    MvRegistry.register(spark, "mv_cache", s"$parent/base", Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
+    MvRewrite.serving(spark, "mv_cache") {
+      MvRegistry.register(spark, "mv_cache", s"$parent/base", Seq("g1"),
+        Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), root)
+    } {
       def serve(): Unit = {
         val q = base.groupBy("g1").agg(sum(col("v")).as("s"))
-        assert(scanPaths(q).exists(_.contains("/store/")), "must serve from MV")
+        assert(scanRoots(q).exists(_.contains("/store/")), "must serve from MV")
         q.collect()
       }
       serve()
@@ -852,9 +771,6 @@ class MvRewriteSpec extends SparkTestBase {
         assert(MvRegistry.relCacheSize == sizeBefore + 1,
           s"cache grew on refresh $v: ${MvRegistry.relCacheSize}")
       }
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_cache")
     }
     assert(MvRegistry.relCacheSize == sizeBefore,
       "deregister must drop the path's cached relation")
@@ -875,21 +791,22 @@ class MvRewriteSpec extends SparkTestBase {
     val dim = spark.read.parquet(s"$parent/dim")
     fact.join(dim, col("fk") === col("pk")).groupBy("attr")
       .agg(count(lit(1)).as("cnt")).write.parquet(s"$parent/mv")
-    MvRegistry.registerJoin(spark, "mv_atomic", s"$parent/fact",
-      s"$parent/dim", "fk", "pk", Seq("attr"),
-      Seq(AggDef("cnt", "count", None)), s"$parent/mv")
-    try {
+    MvRewrite.serving(spark, "mv_atomic") {
+      MvRegistry.registerJoin(spark, "mv_atomic", s"$parent/fact",
+        s"$parent/dim", "fk", "pk", Seq("attr"),
+        Seq(AggDef("cnt", "count", None)), s"$parent/mv")
+    } {
       val d = MvRegistry.all.find(_.name == "mv_atomic").get
       assert(d.join.isDefined, "JoinDef must be visible with the first put")
-    } finally MvRegistry.deregister("mv_atomic")
+    }
   }
 
   test("deregistered view no longer rewrites") {
-    val paths = withMv { (_, base) => // registry emptied by withMv's finally
+    val paths = withMv { (_, base) => // registry emptied when withMv's scope ends
       base
     }
     val q = paths.groupBy("g1", "g2").agg(sum(col("v")).as("s"))
-    assert(!scanPaths(q).exists(_.contains("mv_view")))
+    assert(!scanRoots(q).exists(_.contains("mv_view")))
   }
 
   test("join MV with min/max serves rollups: min-of-mins over the group-sized store") {
@@ -903,32 +820,27 @@ class MvRewriteSpec extends SparkTestBase {
     graft.operators.Ivm.viewJoinFull(fact, Seq(dim -> Seq("fk" -> "pk")),
         Seq("grp", "sub"), "v")
       .write.parquet(s"$parent/mv")
-    MvRegistry.registerJoin(spark, "mv_jf", s"$parent/fact", s"$parent/dim",
-      "fk", "pk", Seq("grp", "sub"),
-      Seq(MvRegistry.AggDef("cnt", "count", None),
-        MvRegistry.AggDef("sum_v", "sum", Some("v")),
-        MvRegistry.AggDef("min_v", "min", Some("v")),
-        MvRegistry.AggDef("max_v", "max", Some("v"))), s"$parent/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
-      def q() = fact.join(dim, col("fk") === col("pk"))
-        .groupBy("grp")
-        .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"),
-          min(col("v")).as("min_v"), max(col("v")).as("max_v"))
+    def q() = fact.join(dim, col("fk") === col("pk"))
+      .groupBy("grp")
+      .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"),
+        min(col("v")).as("min_v"), max(col("v")).as("max_v"))
+    // the direct rollup, outside the scope (rule off)
+    val direct = q().collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    MvRewrite.serving(spark, "mv_jf") {
+      MvRegistry.registerJoin(spark, "mv_jf", s"$parent/fact", s"$parent/dim",
+        "fk", "pk", Seq("grp", "sub"),
+        Seq(AggDef("cnt", "count", None),
+          AggDef("sum_v", "sum", Some("v")),
+          AggDef("min_v", "min", Some("v")),
+          AggDef("max_v", "max", Some("v"))), s"$parent/mv")
+    } {
       val served = q()
-      assert(scanPaths(served).forall(_.contains("/mv")) &&
-        scanPaths(served).nonEmpty,
-        s"coarser min/max rollup must serve from the join MV: ${scanPaths(served)}")
+      assert(scanRoots(served).forall(_.contains("/mv")) &&
+        scanRoots(served).nonEmpty,
+        s"coarser min/max rollup must serve from the join MV: ${scanRoots(served)}")
       val got = served.collect()
         .map(r => r.getString(0) -> r.toSeq.tail).toMap
-      spark.experimental.extraOptimizations = prev
-      val direct = q().collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-      spark.experimental.extraOptimizations = prev :+ MvRewrite()
       assert(got == direct, s"$got vs $direct")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_jf")
     }
   }
 
@@ -942,46 +854,39 @@ class MvRewriteSpec extends SparkTestBase {
     val (depth, width) = (4, 16)
     graft.operators.Ivm.viewCms(base, Seq("g1"), "s", depth, width)
       .write.parquet(s"$parent/store")
-    MvRegistry.registerCms(spark, "mv_cms", s"$parent/base", Seq("g1"), "s",
-      depth, width, s"$parent/store")
-    val prev = spark.experimental.extraOptimizations
-    def ruleOff[T](body: => T): T = {
-      spark.experimental.extraOptimizations = prev
-      try body
-      finally spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    }
-    spark.experimental.extraOptimizations = prev :+ MvRewrite()
-    try {
-      def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.toSeq.init.mkString("|") -> r.getLong(r.length - 1))
-        .sortBy(_._1).toSeq
+    def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.toSeq.init.mkString("|") -> r.getLong(r.length - 1))
+      .sortBy(_._1).toSeq
+    val terms = Seq("v1", "v7", "zzz").toDF("term")
+    def estimate = Cms.pointEstimate(
+      Cms.build(base, Seq.empty, col("s"), depth, width),
+      terms, "term", depth, width)
+    // the direct builds, outside the scope (rule off)
+    val exactCells = cells(Cms.build(base, Seq("g1"), col("s"), depth, width))
+    val globalCells = cells(Cms.build(base, Seq.empty, col("s"), depth, width))
+    val directEst = estimate.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    MvRewrite.serving(spark, "mv_cms") {
+      MvRegistry.registerCms(spark, "mv_cms", s"$parent/base", Seq("g1"), "s",
+        depth, width, s"$parent/store")
+    } {
       // exact keys: a re-stated build projects the store, base gone
       val exact = Cms.build(base, Seq("g1"), col("s"), depth, width)
-      assert(scanPaths(exact).exists(_.contains("/store")) &&
-        !scanPaths(exact).exists(_.contains("/base")),
-        s"exact-key build must serve from the store: ${scanPaths(exact)}")
-      assert(cells(exact) ==
-        ruleOff(cells(Cms.build(base, Seq("g1"), col("s"), depth, width))))
+      assert(scanRoots(exact).exists(_.contains("/store")) &&
+        !scanRoots(exact).exists(_.contains("/base")),
+        s"exact-key build must serve from the store: ${scanRoots(exact)}")
+      assert(cells(exact) == exactCells)
       // subset (here: global) keys: cells re-aggregate by sum — equal to
       // the direct coarser build bit-for-bit
       val global = Cms.build(base, Seq.empty, col("s"), depth, width)
-      assert(scanPaths(global).exists(_.contains("/store")) &&
-        !scanPaths(global).exists(_.contains("/base")),
-        s"global build must roll up from the store: ${scanPaths(global)}")
-      assert(cells(global) ==
-        ruleOff(cells(Cms.build(base, Seq.empty, col("s"), depth, width))))
+      assert(scanRoots(global).exists(_.contains("/store")) &&
+        !scanRoots(global).exists(_.contains("/base")),
+        s"global build must roll up from the store: ${scanRoots(global)}")
+      assert(cells(global) == globalCells)
       // a downstream estimate probe composes on the served relation
-      val terms = Seq("v1", "v7", "zzz").toDF("term")
-      val est = Cms.pointEstimate(
-        Cms.build(base, Seq.empty, col("s"), depth, width),
-        terms, "term", depth, width)
-      assert(!scanPaths(est).exists(_.contains("/base")),
-        s"estimate over a served build must not scan the base: ${scanPaths(est)}")
+      val est = estimate
+      assert(!scanRoots(est).exists(_.contains("/base")),
+        s"estimate over a served build must not scan the base: ${scanRoots(est)}")
       val servedEst = est.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val directEst = ruleOff(Cms.pointEstimate(
-        Cms.build(base, Seq.empty, col("s"), depth, width),
-        terms, "term", depth, width)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
       assert(servedEst == directEst, s"$servedEst vs $directEst")
       // guards: different geometry, different value column, and a
       // grouping key the store does not carry all fall through
@@ -990,11 +895,91 @@ class MvRewriteSpec extends SparkTestBase {
         "depth" -> Cms.build(base, Seq("g1"), col("s"), 2, width),
         "value" -> Cms.build(base, Seq("g1"), col("g2"), depth, width),
         "keys" -> Cms.build(base, Seq("g2"), col("s"), depth, width)))
-        assert(!scanPaths(q).exists(_.contains("/store")),
+        assert(!scanRoots(q).exists(_.contains("/store")),
           s"$label mismatch must fall through to the base")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_cms")
     }
+  }
+
+
+  /** A small MV over a fresh base: (base dir, MV dir, the base). */
+  private def smallMv(tag: String): (String, String, org.apache.spark.sql.DataFrame) = {
+    val parent = freshDir(tag)
+    (1 to 60).map(i => (s"g${i % 3}", i.toLong)).toDF("g1", "v")
+      .write.parquet(s"$parent/base")
+    val base = spark.read.parquet(s"$parent/base")
+    base.groupBy("g1").agg(sum(col("v")).as("sum_v")).write.parquet(s"$parent/mv")
+    (s"$parent/base", s"$parent/mv", base)
+  }
+
+  test("a scope that throws leaves no view registered and the rules as they were") {
+    val (baseDir, mvDir, base) = smallMv("mv_throw")
+    def register(name: String): Unit = MvRegistry.register(spark, name, baseDir,
+      Seq("g1"), Seq(AggDef("sum_v", "sum", Some("v"))), mvDir)
+    val before = spark.experimental.extraOptimizations
+    assert(MvRegistry.isEmpty, s"a view leaked into this test: ${MvRegistry.all.map(_.name)}")
+    // a refresh that fails after the registration
+    intercept[IllegalStateException] {
+      MvRewrite.serving(spark, "mv_throw_refresh") {
+        register("mv_throw_refresh")
+        throw new IllegalStateException("refresh failed")
+      }(fail("the body must not run after a failed refresh"))
+    }
+    assert(MvRegistry.isEmpty)
+    assert(spark.experimental.extraOptimizations == before)
+    // a body that fails while the rule is live
+    intercept[IllegalStateException] {
+      MvRewrite.serving(spark, "mv_throw_body")(register("mv_throw_body")) {
+        assert(scanRoots(base.groupBy("g1").agg(sum(col("v")).as("s")))
+          .exists(_.contains(mvDir)), "the view must serve inside the scope")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(MvRegistry.isEmpty)
+    assert(spark.experimental.extraOptimizations == before)
+    assert(!scanRoots(base.groupBy("g1").agg(sum(col("v")).as("s")))
+      .exists(_.contains(mvDir)), "the view still serves after its scope")
+  }
+
+  test("a scope in a session that already holds an MvRewrite adds none and keeps it") {
+    val (baseDir, mvDir, base) = smallMv("mv_held")
+    val before = spark.experimental.extraOptimizations
+    val held = MvRewrite()
+    spark.experimental.extraOptimizations = before :+ held
+    try {
+      MvRewrite.serving(spark, "mv_held") {
+        MvRegistry.register(spark, "mv_held", baseDir, Seq("g1"),
+          Seq(AggDef("sum_v", "sum", Some("v"))), mvDir)
+      } {
+        val rules = spark.experimental.extraOptimizations.filter(_.isInstanceOf[MvRewrite])
+        assert(rules.size == 1 && (rules.head eq held), rules)
+        assert(scanRoots(base.groupBy("g1").agg(sum(col("v")).as("s")))
+          .exists(_.contains(mvDir)), "the held rule must serve the view")
+      }
+      val after = spark.experimental.extraOptimizations
+      assert(after.size == before.size + 1 && (after.last eq held),
+        s"the held rule was removed or duplicated: $after")
+      assert(MvRegistry.isEmpty)
+    } finally spark.experimental.extraOptimizations = before
+  }
+
+  test("no fixture under queries/ serves an MV by hand") {
+    // no allow-list: every served query runs in MvRewrite.serving and
+    // reads its leaves through MvRewrite.scanRoots
+    val hand = """experimental\.extraOptimizations\s*[+:]*=(?!=)|rootPaths|MvRegistry\.deregister""".r
+    val fixtureName = """Fixture\(\s*"([a-z0-9_]+)"""".r
+    val files = new java.io.File("src/main/scala/graft/queries").listFiles
+      .filter(_.getName.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val offenders = files.flatMap { f =>
+      val src = { val in = Source.fromFile(f, "UTF-8"); try in.mkString finally in.close() }
+      hand.findAllMatchIn(src).map { m =>
+        val fixture = fixtureName.findAllMatchIn(src.substring(0, m.start))
+          .toSeq.lastOption.fold("?")(_.group(1))
+        val line = src.substring(0, m.start).count(_ == '\n') + 1
+        s"${f.getName}:$line $fixture: ${m.matched.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "MV serving by hand; use MvRewrite.serving and MvRewrite.scanRoots:\n" +
+      offenders.mkString("\n"))
   }
 }

@@ -8,8 +8,8 @@ import org.scalacheck.Prop.propBoolean
 import graft.streaming.{Replay, Streams}
 
 /** [[Replay]], the one driver of a replayed streaming query: its n-part
-  * chunking on generated keys, empty and one-row input, the
-  * final-watermark resend, the posture's conf restore when the query
+  * chunking on generated keys, empty and one-row input, the final
+  * watermark applied by a no-data trigger, the posture's conf restore when the query
   * fails, and that no fixture under `queries/` drives a replay by hand.
   *
   * The seed is random per run and printed on failure; set GRAFT_PROP_SEED to
@@ -60,33 +60,31 @@ class ReplaySpec extends SparkTestBase {
 
   test("empty and one-row input replay") {
     val empty = Replay.parts(Seq.empty[(Long, String)].toDF("k", "v"), 2, "k")
-    assert(empty.triggers.isEmpty && empty.flushed.triggers.isEmpty)
-    assert(Replay(spark, empty.flushed, "replay_empty")(identity).count() == 0)
+    assert(empty.triggers.isEmpty)
+    assert(Replay(spark, empty, "replay_empty")(identity).count() == 0)
 
     val one = Replay.parts(Seq((7L, "x")).toDF("k", "v"), 2, "k")
     assert(one.triggers.map(_.size) == Seq(1))
-    assert(one.flushed.triggers.map(_.size) == Seq(1, 1))
     val out = Replay(spark, one, "replay_one")(identity)
     assert(out.as[(Long, String)].collect().toSeq == Seq((7L, "x")))
     assert(out.columns.toSeq == Seq("k", "v"))
   }
 
-  test("the final-watermark resend makes a window ending at the last event time emit") {
-    // 10 s tumbling windows, delay 0; the last event (10 s) ends window 0
+  test("no-data triggers apply the final watermark in any session") {
+    // 10 s tumbling windows, delay 0; the last event (10 s) ends window 0,
+    // which only a trigger after the last data trigger can emit
     val events = Seq(1L, 4L, 10L).toDF("es")
-    def windows(chunks: Replay.Chunks): Set[Long] =
-      // no no-data trigger, so only a data trigger applies a watermark
-      Streams.withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        Replay(spark, chunks, "replay_flush") { st =>
-          st.withColumn("ts", timestamp_seconds(col("es")))
-            .withWatermark("ts", "0 seconds")
-            .groupBy(window(col("ts"), "10 seconds")).count()
-            .select(col("window.start").cast("long"))
-        }.as[Long].collect().toSet
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    Streams.withConf(spark, noData -> "false") {
+      val out = Replay(spark, Replay.parts(events, 2, "es"), "replay_final") { st =>
+        st.withColumn("ts", timestamp_seconds(col("es")))
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "10 seconds")).count()
+          .select(col("window.start").cast("long"))
       }
-    val chunks = Replay.parts(events, 2, "es")
-    assert(windows(chunks) == Set.empty[Long])
-    assert(windows(chunks.flushed) == Set(0L))
+      assert(out.as[Long].collect().toSet == Set(0L))
+      assert(spark.conf.get(noData) == "false", "the posture must restore the session's value")
+    }
   }
 
   test("a failing replay restores the conf it set, unset keys included, and stops its query") {
